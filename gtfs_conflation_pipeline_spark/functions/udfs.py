@@ -1,18 +1,120 @@
-"""Arrow-vectorized pandas_udf wrappers around the numpy kernels.
+"""Arrow-vectorized UDF wrappers and the packed-pair kernel boundary.
 
 These are the ONLY Python entry points on the hot path — every one receives
 Arrow batches and runs numpy kernels; no per-row Python UDFs exist in this
 engine (north-rule requirement; enforced by tests/test_no_row_udfs.py).
+
+Pair kernels (refine, cospatiality, scoring) run under mapInArrow and share
+one boundary: `pack_slabs` groups a batch's rows by vertex counts read off
+the Arrow list offsets, `gather` stacks each slab straight out of the flat
+list buffer, and `emit` builds the output batch with passthrough columns
+taken in Arrow (strings and ids never become Python objects).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import kernels as K
+
+# Slab cap for packed geometry kernels: each vectorized call materializes
+# ~(slab, ~4*na, nb) float64 projection tensors; capping the element count
+# keeps the working set L2-resident (~1.5 MB/tensor) instead of streaming
+# multi-100MB transients through DRAM — measured 3-60x on the 32-vCPU
+# development host, where large fresh allocations additionally page-fault at
+# MB/s rates (CLAUDE.md memory-noise rule). Generic cache-locality win, not
+# just a host quirk.
+KERNEL_SLAB_ELEMS = 200_000
+
+
+def _slab_rows(per_pair_elems: int) -> int:
+    return max(32, KERNEL_SLAB_ELEMS // max(per_pair_elems, 1))
+
+
+def list_buffers(col: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
+    """(flat float64 values, row offsets) of a list<double> column. The
+    offsets are absolute into `.values`, also on sliced batches — never
+    pair them with `.flatten()`, which drops the slice prefix."""
+    return col.values.to_numpy(zero_copy_only=False), col.offsets.to_numpy()
+
+
+def pack_slabs(
+    keys: np.ndarray, per_row_elems: Callable[..., int]
+) -> Iterator[tuple[tuple[int, ...], np.ndarray]]:
+    """Group row indices by their (R, k) integer key rows and yield
+    (key, rows) slabs of at most _slab_rows(per_row_elems(*key)) rows.
+
+    Rows with any key < 2 are dropped: a polyline under two vertices never
+    passes a kernel's short-line cutoff (scalar parity). One stable lexsort
+    keeps each group in batch order, so slab membership is the same as a
+    first-seen grouping; only the order of the groups differs."""
+    rows = np.flatnonzero((keys >= 2).all(axis=1))
+    if rows.size == 0:
+        return
+    k = keys[rows]
+    order = np.lexsort(k.T[::-1])
+    rows, k = rows[order], k[order]
+    starts = np.flatnonzero(np.r_[True, (k[1:] != k[:-1]).any(axis=1)])
+    for s, e in zip(starts, np.r_[starts[1:], rows.size]):
+        key = tuple(int(v) for v in k[s])
+        slab = _slab_rows(per_row_elems(*key))
+        for s0 in range(s, e, slab):
+            yield key, rows[s0 : min(s0 + slab, e)]
+
+
+def gather(values: np.ndarray, offsets: np.ndarray, rows: np.ndarray, n: int) -> np.ndarray:
+    """(P, n) stack of the n-element lists at `rows`: one fancy index into
+    the flat list buffer."""
+    return values[offsets[rows, None] + np.arange(n)]
+
+
+def emit(
+    batch: pa.RecordBatch, schema: pa.Schema, rows: list, outs: list
+) -> pa.RecordBatch:
+    """Kernel output batch. `rows` are the kept input-row indices per slab,
+    `outs` the matching dicts of kernel output arrays. Schema fields that
+    the input batch carries are passed through with Arrow `take` (cast to
+    the schema type: with spark.sql.execution.arrow.useLargeVarTypes on,
+    strings arrive as large_string); the rest are the concatenated kernel
+    outputs."""
+    idx = np.concatenate([np.empty(0, np.int64), *rows])
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column(f.name).take(idx).cast(f.type)
+            if f.name in batch.schema.names
+            else pa.array(np.concatenate([np.empty(0), *(o[f.name] for o in outs)]), f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+def map_pairs(
+    batches: Iterator[pa.RecordBatch],
+    geo_cols: tuple[str, str, str, str],
+    schema: pa.Schema,
+    per_pair_elems: Callable[[int, int], int],
+    kernel: Callable[..., tuple[np.ndarray, dict]],
+) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body of a same-shape pair kernel: per batch, pack pairs by
+    (len A, len B) read off the offsets of geo_cols = (A xs, A ys, B xs,
+    B ys), run `kernel(AX, AY, BX, BY) -> (valid mask, {column: (P,)
+    array})` once per slab and emit the valid rows."""
+    for batch in batches:
+        geo = [list_buffers(batch.column(c)) for c in geo_cols]
+        keys = np.stack([np.diff(geo[0][1]), np.diff(geo[2][1])], axis=1)
+        rows, outs = [], []
+        for (na, nb), sl in pack_slabs(keys, per_pair_elems):
+            ok, m = kernel(*(gather(v, o, sl, n) for (v, o), n in zip(geo, (na, na, nb, nb))))
+            rows.append(sl[ok])
+            outs.append({k: v[ok] for k, v in m.items()})
+        yield emit(batch, schema, rows, outs)
 
 
 def arrow_frame(out: dict, object_cols: tuple[str, ...] = ("xs", "ys")) -> pd.DataFrame:
@@ -38,32 +140,6 @@ def length_km(xs: pd.Series, ys: pd.Series) -> pd.Series:
 def cell_of(lon: pd.Series, lat: pd.Series, cell_deg: pd.Series) -> pd.Series:
     """Morton cell id of a point at the given resolution."""
     return pd.Series(K.cell_id(lon.values, lat.values, float(cell_deg.iloc[0])))
-
-
-def make_cover_cells_udf(cell_deg: float, ring: int):
-    """Cover cells of a polyline (cells of midpoint-densified vertices,
-    optionally k-ring dilated) — the candidate-generation key set.
-
-    Returned as array<long>; explode() downstream. ring widening is the
-    Spark analog of the reference's retry ladder
-    (shstMatchFeatures.js:283-362 — a miss widens the search radius).
-    """
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover_cells(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        dx, dy = [], []
-        for x, y in zip(xs, ys):
-            x = np.asarray(x, dtype=np.float64)
-            y = np.asarray(y, dtype=np.float64)
-            if x.size >= 2:
-                x, y = K.midpoints(x, y)
-            dx.append(x)
-            dy.append(y)
-        # one vectorized pass for the whole Arrow batch (per-row
-        # unique(axis=0) was the candidate-generation bottleneck)
-        return pd.Series(K.cell_cover_rows(dx, dy, cell_deg, ring=ring))
-
-    return cover_cells
 
 
 def make_tiles_udf(zoom_by_row: bool = True):
@@ -113,10 +189,3 @@ def make_tiles_udf(zoom_by_row: bool = True):
 
     return tiles_of
 
-
-@F.pandas_udf(T.StringType())
-def geoprox_key_udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
-    """Reference-parity base-36 geoprox key (getGeoProximityKey.js)."""
-    return pd.Series(
-        [K.geoprox_key(np.asarray(x), np.asarray(y)) for x, y in zip(xs, ys)]
-    )

@@ -203,54 +203,6 @@ def cell_cover_of_points(lon, lat, cell_deg: float, ring: int = 0) -> np.ndarray
     return morton64(ij[:, 0], ij[:, 1]).astype(np.int64)
 
 
-def cell_cover_rows(
-    lons: list, lats: list, cell_deg: float, ring: int = 0
-) -> list:
-    """Multi-row `cell_cover_of_points`: unique cover cells per row.
-
-    Allocation-light per-row algorithm (this box shows host-level
-    page-fault storms on large transient allocations, so one big
-    concatenate-lexsort pass is NOT reliably faster): per row, dedupe the
-    BASE cells first via a 1-D unique on a packed (ix<<32|iy) key — a
-    ~40-point polyline touches ~10 cells, so the k-ring expansion then
-    costs 9x10 instead of 9x40 — and unique again post-expansion. Avoids
-    the structured np.unique(axis=0) sort entirely (the measured ~3.6 ms/
-    row candidate-generation bottleneck). Per-row cell SETS identical to
-    cell_cover_of_points (packing and morton are bijective on grid pairs);
-    ordering within a row unspecified (consumers explode + join)."""
-    out = []
-    # iy is biased by +ring before packing so a dgy=-1 offset at iy=0 (lat
-    # within cell_deg of -90) can never borrow from the ix half of the
-    # packed key — without the bias the decode at that domain edge yields
-    # (ix-1, 0xFFFFFFFF) while cell_cover_of_points yields (ix, -1),
-    # breaking the identical-cell-sets contract (round-3 ADVICE). The bias
-    # is subtracted after unpacking, so emitted (ix, iy+dgy) pairs match
-    # cell_cover_of_points exactly, including negative iy.
-    bias = np.int64(ring)
-    if ring > 0:
-        offs = np.arange(-ring, ring + 1, dtype=np.int64)
-        dgx, dgy = np.meshgrid(offs, offs)
-        doff = (dgx.ravel() << np.int64(32)) + dgy.ravel()
-    for x, y in zip(lons, lats):
-        x = np.asarray(x, dtype=np.float64)
-        y = np.asarray(y, dtype=np.float64)
-        if x.size == 0:
-            out.append(np.empty(0, dtype=np.int64))
-            continue
-        ix = np.floor((x + 180.0) / cell_deg).astype(np.int64)
-        iy = np.floor((y + 90.0) / cell_deg).astype(np.int64)
-        # pack (ix, iy+bias) into one int64 (grid indices fit 32 bits)
-        packed = np.unique((ix << np.int64(32)) + iy + bias)
-        if ring > 0:
-            packed = np.unique((packed[:, None] + doff[None, :]).ravel())
-        out.append(
-            morton64(
-                packed >> np.int64(32), (packed & np.int64(0xFFFFFFFF)) - bias
-            ).astype(np.int64)
-        )
-    return out
-
-
 def geoprox_key(xs, ys) -> str:
     """Reference-parity geoprox key (getGeoProximityKey.js:8-46).
 

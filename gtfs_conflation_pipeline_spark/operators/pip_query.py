@@ -8,6 +8,7 @@ segment polygons (createTableFns.js:18-21, loaders.js:104-133) and answers
 Spark shape (filter-refine, same as the conflation join):
   coarse  query polygon -> cover cells (driver-side numpy, polygon is one
           object) broadcast -> equi-join against segment cover cells
+          (the JVM spatial_join.cover_cells_col keys)
   refine  vertex-in-ring PIP (Arrow kernel) on the candidates
 
 At 10^12 scale the coarse join prunes by Iceberg/parquet partition stats on
@@ -25,15 +26,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import kernels as K
-from ..functions.udfs import make_cover_cells_udf
-from .spatial_join import CELL_DEG
+from .spatial_join import CELL_DEG, cover_cells_col
 
 
 def polygon_cover_cells(ring_x, ring_y, cell_deg: float = CELL_DEG) -> list[int]:
     """All cells intersecting the polygon's bbox, filtered to those whose
     center or corners fall inside (coarse, superset-safe: bbox cells whose
     cell-square intersects the ring's bbox are kept; exactness comes from
-    the refine step)."""
+    the refine step). Keys are the packed (ix << 32) + iy grid cells of
+    spatial_join.cover_cells_col."""
     ring_x = np.asarray(ring_x, dtype=np.float64)
     ring_y = np.asarray(ring_y, dtype=np.float64)
     ix0 = int(np.floor((ring_x.min() + 180.0) / cell_deg))
@@ -41,7 +42,7 @@ def polygon_cover_cells(ring_x, ring_y, cell_deg: float = CELL_DEG) -> list[int]
     iy0 = int(np.floor((ring_y.min() + 90.0) / cell_deg))
     iy1 = int(np.floor((ring_y.max() + 90.0) / cell_deg))
     xs, ys = np.meshgrid(np.arange(ix0, ix1 + 1), np.arange(iy0, iy1 + 1))
-    return [int(c) for c in K.morton64(xs.ravel(), ys.ravel()).astype(np.int64)]
+    return ((xs.astype(np.int64) << 32) + ys).ravel().tolist()
 
 
 PARTITION_CELL_DEG = 0.128  # coarse hive-partition grid (64x the fine cells)
@@ -98,13 +99,17 @@ def segments_overlapping_polygon(
                 for dy in (-1, 0, 1):
                     with_margin.add((ix + dx) * (1 << 21) + (iy + dy))
         osm = osm.filter(F.col("p_cell").isin(sorted(with_margin)))
-    cover = make_cover_cells_udf(cell_deg, ring=0)
     cells_df = spark.createDataFrame(
         [(c,) for c in polygon_cover_cells(ring_x, ring_y, cell_deg)], "cell long"
     )
     cands = (
-        osm.repartition(spark.sparkContext.defaultParallelism)
-        .select("segment_id", "shst_reference", "xs", "ys", F.explode(cover("xs", "ys")).alias("cell"))
+        osm.select(
+            "segment_id",
+            "shst_reference",
+            "xs",
+            "ys",
+            F.explode(cover_cells_col(F.col("xs"), F.col("ys"), cell_deg, 0)).alias("cell"),
+        )
         .join(F.broadcast(cells_df), "cell")
         .dropDuplicates(["segment_id"])
     )

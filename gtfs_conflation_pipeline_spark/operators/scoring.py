@@ -9,9 +9,10 @@ reference-parity `shape_similarity` (kernels.shape_similarity — Procrustes
 normalize + rotation-restricted minimum planar Fréchet) PLUS the
 numerically defined discrete Fréchet distance and symmetric Hausdorff.
 
-Arrow-batched mapInPandas with CROSS-PAIR PACKING (round-3): within each
-Arrow batch, pairs are grouped by (slice-vertex-counts, resample-n) and
-each group runs through ONE vectorized kernel call per metric
+Arrow-batched mapInArrow with CROSS-PAIR PACKING (round-3; the shared
+functions.udfs boundary): within each Arrow batch, pairs are grouped by
+(slice-vertex-counts, resample-n) and each group runs through ONE
+vectorized kernel call per metric
 (discrete_frechet_km_batch / hausdorff_km_batch / mean_dev_km_batch /
 shape_similarity_batch) over (P, n) stacks — per-pair numpy on ~20-50
 point arrays is dispatch-overhead-bound, and the Fréchet DP in particular
@@ -27,13 +28,14 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import kernels as K
-from .spatial_join import _slab_rows
+from ..functions import udfs as U
 
 POINTS_PER_KM = 50  # frechet.js:6 pointsPerKm
 
@@ -105,63 +107,56 @@ def score_matches(matches: DataFrame, segments: DataFrame, osm: DataFrame) -> Da
     par = matches.sparkSession.sparkContext.defaultParallelism
     inp = inp.repartition(par)
 
-    meta_cols = ("shape_id", "shape_index", "segment_id", "shst_reference")
+    schema = to_arrow_schema(SCORES_SCHEMA)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in SCORES_SCHEMA.fields}
-            gx = pdf["g_xs"].to_numpy()
-            gy = pdf["g_ys"].to_numpy()
-            ox = pdf["o_xs"].to_numpy()
-            oy = pdf["o_ys"].to_numpy()
-            a0 = pdf["section_start"].to_numpy()
-            a1 = pdf["section_end"].to_numpy()
-            b0 = pdf["osm_start"].to_numpy()
-            b1 = pdf["osm_end"].to_numpy()
-            meta = {c: pdf[c].to_numpy() for c in meta_cols}
-            # slice per row (variable-size output), then PACK pairs whose
-            # (slice sizes, resample n) agree into one kernel call per group
-            groups: dict[tuple[int, int, int], list] = {}
-            for i in range(len(pdf)):
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            geo = [U.list_buffers(batch.column(c)) for c in ("g_xs", "g_ys", "o_xs", "o_ys")]
+            ends = [
+                batch.column(c).to_numpy()
+                for c in ("section_start", "section_end", "osm_start", "osm_end")
+            ]
+            # slice per row (variable-size output) into flat buffers, then
+            # PACK pairs whose (slice sizes, resample n) agree into one
+            # kernel call per slab
+            kept, keys, pieces = [], [], ([], [], [], [])
+            for i in range(batch.num_rows):
                 sl = _slice_and_n(
-                    np.asarray(gx[i]), np.asarray(gy[i]),
-                    np.asarray(ox[i]), np.asarray(oy[i]),
-                    a0[i], a1[i], b0[i], b1[i],
+                    *(v[o[i] : o[i + 1]] for v, o in geo), *(e[i] for e in ends)
                 )
                 if sl is None:
                     continue
-                sx, sy, tx, ty, n = sl
-                groups.setdefault((sx.size, tx.size, n), []).append(
-                    (i, sx, sy, tx, ty)
+                kept.append(i)
+                keys.append((sl[0].size, sl[2].size, sl[4]))
+                for acc, a in zip(pieces, sl[:4]):
+                    acc.append(a)
+            kept = np.array(kept, dtype=np.int64)
+            keys = np.array(keys, dtype=np.int64).reshape(-1, 3)
+            sx, sy, tx, ty = (np.concatenate([np.empty(0), *p]) for p in pieces)
+            s_off = np.r_[0, np.cumsum(keys[:, 0])]
+            t_off = np.r_[0, np.cumsum(keys[:, 1])]
+            rows, outs = [], []
+            # slab cap: the Fréchet DP / snap tensors are (slab, n, n) and
+            # (slab, ns, nt) float64 — bounded slabs keep them cache-resident
+            # (see udfs.KERNEL_SLAB_ELEMS)
+            for (ns, nt, n), sl in U.pack_slabs(
+                keys, lambda ns, nt, n: max(n * n, ns * nt, 50 * 50)
+            ):
+                SX, SY = U.gather(sx, s_off, sl, ns), U.gather(sy, s_off, sl, ns)
+                TX, TY = U.gather(tx, t_off, sl, nt), U.gather(ty, t_off, sl, nt)
+                R = np.empty((4, sl.size, n))  # resampled S x, S y, T x, T y
+                for j in range(sl.size):
+                    R[0, j], R[1, j] = K.resample_polyline(SX[j], SY[j], n)
+                    R[2, j], R[3, j] = K.resample_polyline(TX[j], TY[j], n)
+                rows.append(kept[sl])
+                outs.append(
+                    {
+                        "frechet_km": K.discrete_frechet_km_batch(*R),
+                        "hausdorff_km": K.hausdorff_km_batch(SX, SY, TX, TY),
+                        "mean_dev_km": K.mean_dev_km_batch(SX, SY, TX, TY),
+                        "shape_similarity": K.shape_similarity_batch(*R),
+                    }
                 )
-            for (ns, nt, n), items in groups.items():
-                # slab cap: the Fréchet DP / snap tensors are (slab, n, n)
-                # and (slab, ns, nt) float64 — bounded slabs keep them
-                # cache-resident (see spatial_join.KERNEL_SLAB_ELEMS)
-                slab = _slab_rows(max(n * n, ns * nt, nt * ns, 50 * 50))
-                for s0 in range(0, len(items), slab):
-                    sl = items[s0 : s0 + slab]
-                    SX = np.stack([it[1] for it in sl])
-                    SY = np.stack([it[2] for it in sl])
-                    TX = np.stack([it[3] for it in sl])
-                    TY = np.stack([it[4] for it in sl])
-                    rs = [K.resample_polyline(it[1], it[2], n) for it in sl]
-                    rt = [K.resample_polyline(it[3], it[4], n) for it in sl]
-                    RSX = np.stack([r[0] for r in rs])
-                    RSY = np.stack([r[1] for r in rs])
-                    RTX = np.stack([r[0] for r in rt])
-                    RTY = np.stack([r[1] for r in rt])
-                    fr = K.discrete_frechet_km_batch(RSX, RSY, RTX, RTY)
-                    hd = K.hausdorff_km_batch(SX, SY, TX, TY)
-                    md = K.mean_dev_km_batch(SX, SY, TX, TY)
-                    ss = K.shape_similarity_batch(RSX, RSY, RTX, RTY)
-                    idxs = [it[0] for it in sl]
-                    for c in meta_cols:
-                        rows[c].extend(meta[c][idxs])
-                    rows["frechet_km"].extend(fr)
-                    rows["hausdorff_km"].extend(hd)
-                    rows["mean_dev_km"].extend(md)
-                    rows["shape_similarity"].extend(ss)
-            yield pd.DataFrame(rows)
+            yield U.emit(batch, schema, rows, outs)
 
-    return inp.mapInPandas(kernel, SCORES_SCHEMA)
+    return inp.mapInArrow(kernel, SCORES_SCHEMA)

@@ -8,8 +8,9 @@ filter-refine spatial join — the same shape the reference itself uses for its
 map join (equi-join on a cheap key first, expensive geometry test second,
 GtfsConflationMapJoinDAO/loaders.js:139-155 → 195-274):
 
-  1. CANDIDATES — both sides explode to Morton cover cells; equi-join on
-     cell. The GTFS side dilates by a k-ring (the retry-ladder analog,
+  1. CANDIDATES — both sides explode to packed (ix << 32) + iy grid cover
+     cells, computed as JVM column expressions (cover_cells_col); equi-join
+     on cell. The GTFS side dilates by a k-ring (the retry-ladder analog,
      shstMatchFeatures.js:283-362). This is a plain Spark shuffle join on a
      LongType key: Catalyst/AQE handle partitioning, coalescing and skew
      (urban-core hot cells) natively; an explicit salt is unnecessary because
@@ -22,9 +23,9 @@ GtfsConflationMapJoinDAO/loaders.js:139-155 → 195-274):
      by (deviation, coverage): the observable semantics of the reference's
      path-choice fixpoint (chooseOptimalShstMatches) at fixture complexity,
      with fully specified tie-breaks (sort by score then shst_reference) so
-     engine == oracle bit-for-bit.
-  4. ALONG-INDEX — RANK() over (shape_id, shape_index) ordered by
-     section_start: the reference's topological ordering of chosen segments
+     engine == oracle bit-for-bit. The same UDF assigns the along-index:
+     the competition rank by section_start within each segment, the
+     reference's topological ordering of chosen segments
      (GtfsConflationMapJoinDAO/loaders.js:357-366).
 
 Scale: the only shuffles are (a) the cell equi-join and (b) the per-segment
@@ -34,16 +35,15 @@ so the wide arrays cross the wire once.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from .. import kernels as K
+from ..functions import udfs as U
 
 # Cell size tuned to the corridor radius, not the segment length: 0.002 deg
 # (~220 m) + a 1-ring dilation guarantees recall for the 30 m corridor while
@@ -53,18 +53,6 @@ CELL_DEG = 0.002
 CORRIDOR_KM = 0.03  # 30 m refine radius (stop jitter <=20 m, perturb 3 m)
 MIN_COVER_RATIO = 0.10  # MATCHES_LENGTH_RATIO_THOLD (shstMatchFeatures.js:47)
 OVERLAP_TOL = 0.20  # greedy cover: max fraction of a candidate already covered
-
-# Slab cap for packed geometry kernels: each vectorized call materializes
-# ~(slab, ~4*na, nb) float64 projection tensors; capping the element count
-# keeps the working set L2-resident (~1.5 MB/tensor) instead of streaming
-# multi-100MB transients through DRAM — measured 3-60x on this host, where
-# large fresh allocations additionally page-fault at MB/s rates (CLAUDE.md
-# memory-noise rule). Generic cache-locality win, not just a host quirk.
-KERNEL_SLAB_ELEMS = 200_000
-
-
-def _slab_rows(per_pair_elems: int) -> int:
-    return max(32, KERNEL_SLAB_ELEMS // max(per_pair_elems, 1))
 
 
 def _pack_cell(x, y, cell_deg: float):
@@ -85,18 +73,15 @@ def cover_cells_col(xs, ys, cell_deg: float, ring: int):
     """Cover cells of a polyline as a pure JVM column expression (round 7):
     cells of the vertices plus the planar edge midpoints (kernels.midpoints
     densification — same (a+b)/2 IEEE arithmetic), deduped, optionally
-    k-ring dilated. Replaces the Arrow cover-cell UDF on the candidate hot
-    path: the floor/pack arithmetic is exact in both engines (unlike trig),
-    so the candidate-pair SET is identical to the kernel path — cell codes
-    are engine-internal join keys and never leave the operator. Dropping
-    the Python hop also drops the round-robin repartition the Arrow stage
-    needed: the explode now rides the scan's own task parallelism inside
-    codegen.
+    k-ring dilated. The floor/pack arithmetic is exact in both the JVM and
+    numpy (unlike trig), so driver-side numpy builds the same keys
+    (pip_query.polygon_cover_cells). With no Python hop there is no
+    round-robin repartition either: the explode rides the scan's own task
+    parallelism inside codegen.
 
     Ring dilation emits iy-1 for iy=0 rows (lat within one cell of -90) as
     (ix<<32)-1 — distinct from every real cell key (real iy <= 90/cell_deg
-    << 2^32), so such ghost cells match nothing, exactly like the Morton
-    path's (ix, -1) cells."""
+    << 2^32), so such ghost cells match nothing."""
     n = F.size(xs)
     empty = F.array().cast("array<long>")
     v_cells = F.when(
@@ -250,7 +235,6 @@ def candidate_pairs(
     return near.join(g_geom, ["shape_id", "shape_index"]).join(o_geom, "segment_id")
 
 
-_META_COLS = ("shape_id", "shape_index", "segment_id", "shst_reference", "networklevel")
 _OUT_KEYS = (
     ("section_start", "a_start_km"),
     ("section_end", "a_end_km"),
@@ -266,54 +250,36 @@ def refine(pairs: DataFrame, corridor_km: float = CORRIDOR_KM) -> DataFrame:
     """Phase 2: Arrow-batched corridor refine. Emits one row per surviving
     pair with the overlap interval on both lines + deviation stats.
 
-    Cross-pair packing: within each Arrow batch, candidate pairs are
-    grouped by (vertex-count-A, vertex-count-B) and each group runs through
-    ONE vectorized kernel call (kernels.corridor_match_batch) over a (P, n)
-    stack — per-pair numpy on ~20-point arrays is dispatch-overhead-bound
-    (~1 ms/pair), and packing removes that from the hot loop (measured ~3x
-    on the refine stage at 1M images). Same per-row operation order as the
-    scalar kernel, so outputs are value-identical (e2e oracle gate).
+    Cross-pair packing (mapInArrow, functions.udfs boundary): within each
+    Arrow batch, candidate pairs are grouped by (vertex-count-A,
+    vertex-count-B) and each group runs through ONE vectorized kernel call
+    (kernels.corridor_match_batch) over a (P, n) stack — per-pair numpy on
+    ~20-point arrays is dispatch-overhead-bound (~1 ms/pair), and packing
+    removes that from the hot loop (measured ~3x on the refine stage at 1M
+    images). Same per-row operation order as the scalar kernel, so outputs
+    are value-identical (e2e oracle gate). Row order within a batch follows
+    the packing; every consumer is order-free.
     """
+    schema = to_arrow_schema(REFINE_SCHEMA)
+
+    def corridor(AX, AY, BX, BY):
+        ok, m = K.corridor_match_batch(AX, AY, BX, BY, radius_km=corridor_km)
+        return ok, {out_c: m[m_k] for out_c, m_k in _OUT_KEYS}
 
     # Kernel parallelism comes from the attach-join shuffle upstream: with
     # the session's 16 MB AQE advisory size the join output keeps enough
     # partitions for the CPU-bound kernel, so no extra repartition of the
     # heavy array payload is needed.
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in REFINE_SCHEMA.fields}
-            gx = pdf["g_xs"].to_numpy()
-            gy = pdf["g_ys"].to_numpy()
-            ox = pdf["o_xs"].to_numpy()
-            oy = pdf["o_ys"].to_numpy()
-            meta = {c: pdf[c].to_numpy() for c in _META_COLS}
-            groups: dict[tuple[int, int], list[int]] = {}
-            for i in range(len(pdf)):
-                groups.setdefault((len(gx[i]), len(ox[i])), []).append(i)
-            for (na, nb), idxs in groups.items():
-                if na < 2 or nb < 2:
-                    continue  # short-cutoff rejects these (scalar parity)
-                slab = _slab_rows((4 * na - 3) * nb)
-                for s0 in range(0, len(idxs), slab):
-                    sl = idxs[s0 : s0 + slab]
-                    AX = np.stack([np.asarray(gx[i], dtype=np.float64) for i in sl])
-                    AY = np.stack([np.asarray(gy[i], dtype=np.float64) for i in sl])
-                    BX = np.stack([np.asarray(ox[i], dtype=np.float64) for i in sl])
-                    BY = np.stack([np.asarray(oy[i], dtype=np.float64) for i in sl])
-                    ok, m = K.corridor_match_batch(
-                        AX, AY, BX, BY, radius_km=corridor_km
-                    )
-                    keep = np.where(ok)[0]
-                    if keep.size == 0:
-                        continue
-                    kept_idx = [sl[j] for j in keep]
-                    for c in _META_COLS:
-                        rows[c].extend(meta[c][kept_idx])
-                    for out_c, m_k in _OUT_KEYS:
-                        rows[out_c].extend(m[m_k][keep])
-            yield pd.DataFrame(rows)
-
-    return pairs.mapInPandas(kernel, REFINE_SCHEMA)
+    return pairs.mapInArrow(
+        lambda batches: U.map_pairs(
+            batches,
+            ("g_xs", "g_ys", "o_xs", "o_ys"),
+            schema,
+            lambda na, nb: (4 * na - 3) * nb,
+            corridor,
+        ),
+        REFINE_SCHEMA,
+    )
 
 
 def choose_matches(
@@ -545,8 +511,8 @@ def map_segments_cospatiality(
 
     Plan shape mirrors the flagship join: narrow cell-explode self-join ->
     id_a < id_b dedupe -> JVM bbox prefilter -> array attach for survivors
-    -> one Arrow refine hop. Self-join keys are the same Morton cells, so
-    AQE skew-join covers urban-core hot cells."""
+    -> one Arrow refine hop. Self-join keys are the same packed grid cells,
+    so AQE skew-join covers urban-core hot cells."""
     # JVM cover cells, no Arrow hop / repartition (see cover_cells_col)
     cells = osm.select(
         "segment_id",
@@ -613,53 +579,22 @@ def map_segments_cospatiality(
         "segment_id_b",
     )
 
-    out_keys = (
-        "a_start_km", "a_end_km", "b_start_km", "b_end_km",
-        "intxn_a_km", "intxn_b_km",
+    schema = to_arrow_schema(COSPATIALITY_SCHEMA)
+
+    # cross-pair packing, same boundary as the flagship refine; outputs are
+    # value-identical to the scalar kernel (asserted in tests)
+    return attached.mapInArrow(
+        lambda batches: U.map_pairs(
+            batches,
+            ("a_xs", "a_ys", "b_xs", "b_ys"),
+            schema,
+            lambda na, nb: max((4 * na - 3) * nb, (4 * nb - 3) * na),
+            lambda AX, AY, BX, BY: K.cospatiality_two_sided_batch(
+                AX, AY, BX, BY, radius_km=radius_km
+            ),
+        ),
+        COSPATIALITY_SCHEMA,
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # cross-pair packing (round-3, same treatment as the flagship
-        # refine): group pairs by (vertex-count-A, vertex-count-B), one
-        # vectorized cospatiality_two_sided_batch call per bounded slab —
-        # removes the ~1 ms/pair small-array dispatch from the hot loop;
-        # outputs are value-identical to the scalar kernel (asserted in
-        # tests)
-        for pdf in batches:
-            rows = {f.name: [] for f in COSPATIALITY_SCHEMA.fields}
-            axs = pdf["a_xs"].to_numpy()
-            ays = pdf["a_ys"].to_numpy()
-            bxs = pdf["b_xs"].to_numpy()
-            bys = pdf["b_ys"].to_numpy()
-            ida = pdf["segment_id_a"].to_numpy()
-            idb = pdf["segment_id_b"].to_numpy()
-            groups: dict[tuple[int, int], list[int]] = {}
-            for i in range(len(pdf)):
-                groups.setdefault((len(axs[i]), len(bxs[i])), []).append(i)
-            for (na, nb), idxs in groups.items():
-                if na < 2 or nb < 2:
-                    continue  # short-line cutoff rejects these (scalar parity)
-                slab = _slab_rows(max((4 * na - 3) * nb, (4 * nb - 3) * na))
-                for s0 in range(0, len(idxs), slab):
-                    sl = idxs[s0 : s0 + slab]
-                    AX = np.stack([np.asarray(axs[i], dtype=np.float64) for i in sl])
-                    AY = np.stack([np.asarray(ays[i], dtype=np.float64) for i in sl])
-                    BX = np.stack([np.asarray(bxs[i], dtype=np.float64) for i in sl])
-                    BY = np.stack([np.asarray(bys[i], dtype=np.float64) for i in sl])
-                    ok, m = K.cospatiality_two_sided_batch(
-                        AX, AY, BX, BY, radius_km=radius_km
-                    )
-                    keep = np.where(ok)[0]
-                    if keep.size == 0:
-                        continue
-                    kept_idx = [sl[j] for j in keep]
-                    rows["segment_id_a"].extend(ida[kept_idx])
-                    rows["segment_id_b"].extend(idb[kept_idx])
-                    for k in out_keys:
-                        rows[k].extend(m[k][keep])
-            yield pd.DataFrame(rows)
-
-    return attached.mapInPandas(kernel, COSPATIALITY_SCHEMA)
 
 
 def conflation_join(

@@ -322,32 +322,6 @@ def test_corridor_match_batch_equals_scalar():
             assert abs(m["mean_dev_km"][i] - s["mean_dev_km"]) <= 1e-15
 
 
-def test_cell_cover_rows_equals_per_row():
-    """Vectorized multi-row cover == per-row cell_cover_of_points as SETS,
-    for ring 0 and 1, mixed row lengths, negative coords, empty rows."""
-    import numpy as np
-
-    from gtfs_conflation_pipeline_spark import kernels as K
-
-    rng = np.random.default_rng(7)
-    rows = [
-        (np.array([-74.0, -73.99, -73.98]), np.array([42.0, 42.001, 42.0])),
-        (np.array([0.0005]), np.array([-0.0005])),
-        (rng.uniform(-75, -73, 40), rng.uniform(41, 43, 40)),
-        (np.empty(0), np.empty(0)),
-        (np.array([179.9995, -179.9995]), np.array([0.0, 0.0])),
-        # domain edge: lat within cell_deg of -90 puts iy=0, where an
-        # unbiased packed dgy=-1 would borrow from the ix half (round-3
-        # ADVICE fix) — the ring-1 sets must still match per-row exactly
-        (np.array([-74.0, -73.999]), np.array([-89.9995, -89.9993])),
-    ]
-    for ring in (0, 1, 2):
-        got = K.cell_cover_rows([r[0] for r in rows], [r[1] for r in rows], 0.002, ring=ring)
-        for (x, y), g in zip(rows, got):
-            want = K.cell_cover_of_points(x, y, 0.002, ring=ring) if x.size else np.empty(0)
-            assert set(g.tolist()) == set(np.asarray(want).tolist())
-
-
 def test_cospatiality_batch_equals_scalar():
     """Packed two-sided cospatiality == scalar kernel per pair: identical
     validity and bit-identical intervals over overlap / partial / distant /
@@ -525,3 +499,138 @@ def test_shape_similarity_invariances():
     free = K.shape_similarity(ax, ay, rx, ry, restrict_rotation=np.pi)
     assert free > restricted
     assert restricted < 0.95
+
+
+def test_pair_operators_equal_scalar_across_batches(spark):
+    """Operator level, through the mapInArrow pair boundary: refine,
+    map_segments_cospatiality and score_matches over pairs that mix vertex
+    counts (0- and 1-vertex lines for the corridor kernels, 1-vertex slices
+    for scoring), with several Arrow batches per partition and an empty
+    partition, emit exactly the rows the scalar kernels give per pair,
+    with identical doubles."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from gtfs_conflation_pipeline_spark.functions import udfs as U
+    from gtfs_conflation_pipeline_spark.operators import scoring
+    from gtfs_conflation_pipeline_spark.operators import spatial_join as SJ
+
+    rng = np.random.default_rng(5)
+
+    def line(n, x0, dy):
+        xs = x0 + np.sort(rng.uniform(0.0, 0.004, n))
+        return xs.tolist(), (42.0 + dy + rng.uniform(-2e-5, 2e-5, n)).tolist()
+
+    pair_rows = []
+    for na in (0, 1, 2, 3, 5, 8):
+        for nb in (0, 1, 2, 4, 7):
+            for dy in (0.0, 1e-4, 2e-3):  # on, near and off the corridor
+                i = len(pair_rows)
+                x0 = -74.0 + 0.01 * i
+                pair_rows.append(
+                    (f"shp_{i:03d}", i, 1000 + i, f"ref_{i}", i % 3,
+                     *line(na, x0, 0.0), *line(nb, x0, dy), i % 2)
+                )
+    pairs = spark.createDataFrame(
+        pair_rows,
+        "shape_id string, shape_index int, segment_id long, shst_reference string,"
+        " networklevel int, g_xs array<double>, g_ys array<double>,"
+        " o_xs array<double>, o_ys array<double>, part int",
+    ).repartition(4, "part")
+    assert pairs.select(F.spark_partition_id()).distinct().count() < 4
+
+    want_refine = {}
+    for r in pair_rows:
+        m = K.corridor_match(*map(np.asarray, r[5:9]), radius_km=SJ.CORRIDOR_KM)
+        if m is not None:
+            want_refine[r[1]] = (r, m)
+    assert 0 < len(want_refine) < len(pair_rows)
+
+    osm_rows = [
+        (2000 + i, *line(n, -73.5 + 0.001 * (i % 7), 1e-5 * (i % 3)))
+        for i, n in enumerate((0, 1, 2, 3, 5, 8, 2, 4, 7, 1, 3, 6))
+    ]
+    osm = spark.createDataFrame(osm_rows, "segment_id long, xs array<double>, ys array<double>")
+    want_cosp = {}
+    for a in osm_rows:
+        for b in osm_rows:
+            if a[0] < b[0]:
+                c = K.cospatiality_two_sided(*map(np.asarray, (*a[1:], *b[1:])), radius_km=0.005)
+                if c is not None:
+                    want_cosp[(a[0], b[0])] = c
+    assert want_cosp
+
+    # score the refine survivors; every other one gets an empty GTFS
+    # interval, whose 1-vertex slice the scalar scorer rejects
+    match_rows = [
+        (r[0], r[1], r[2], r[3], m["a_start_km"],
+         m["a_start_km"] if r[1] % 2 else m["a_end_km"], m["b_start_km"], m["b_end_km"])
+        for r, m in want_refine.values()
+    ]
+    matches = spark.createDataFrame(
+        match_rows,
+        "shape_id string, shape_index int, segment_id long, shst_reference string,"
+        " section_start double, section_end double, osm_start double, osm_end double",
+    )
+    segments = pairs.select(
+        "shape_id", "shape_index", F.col("g_xs").alias("xs"), F.col("g_ys").alias("ys")
+    )
+    osm_b = pairs.select("segment_id", F.col("o_xs").alias("xs"), F.col("o_ys").alias("ys"))
+    want_scores = {}
+    for mr in match_rows:
+        s = scoring.score_pair(*map(np.asarray, pair_rows[mr[1]][5:9]), *mr[4:8])
+        if s is not None:
+            want_scores[mr[1]] = s
+    assert 0 < len(want_scores) < len(match_rows)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        refined = SJ.refine(pairs).toPandas()
+        cosp = SJ.map_segments_cospatiality(osm).toPandas()
+        scores = scoring.score_matches(matches, segments, osm_b).toPandas()
+    finally:
+        spark.conf.set(key, prev)
+
+    assert sorted(refined.shape_index) == sorted(want_refine)
+    for g in refined.itertuples(index=False):
+        r, m = want_refine[g.shape_index]
+        assert (g.shape_id, g.segment_id, g.shst_reference, g.networklevel) == (r[0], *r[2:5])
+        _, m1 = K.corridor_match_batch(
+            *(np.asarray(a)[None] for a in r[5:9]), radius_km=SJ.CORRIDOR_KM
+        )
+        for out_c, m_k in SJ._OUT_KEYS:
+            assert getattr(g, out_c) == m1[m_k][0], (g.shape_index, out_c)
+            if m_k == "mean_dev_km":  # masked batch mean: <= 1 ulp (kernel doc)
+                assert abs(g.mean_dev_km - m[m_k]) <= np.spacing(m[m_k]), g.shape_index
+            else:
+                assert getattr(g, out_c) == m[m_k], (g.shape_index, out_c)
+
+    assert sorted(zip(cosp.segment_id_a, cosp.segment_id_b)) == sorted(want_cosp)
+    for g in cosp.itertuples(index=False):
+        c = want_cosp[(g.segment_id_a, g.segment_id_b)]
+        for k in ("a_start_km", "a_end_km", "b_start_km", "b_end_km", "intxn_a_km", "intxn_b_km"):
+            assert getattr(g, k) == c[k], (g.segment_id_a, g.segment_id_b, k)
+
+    assert sorted(scores.shape_index) == sorted(want_scores)
+    for g in scores.itertuples(index=False):
+        s = want_scores[g.shape_index]
+        got = (g.frechet_km, g.hausdorff_km, g.mean_dev_km, g.shape_similarity)
+        assert got == s, g.shape_index
+
+    # list offsets are absolute into .values: a sliced batch must see its
+    # own rows, not the rows at the start of the buffer
+    batch = pa.RecordBatch.from_pylist(
+        [dict(zip(("g_xs", "g_ys", "o_xs", "o_ys", "i"), (*r[5:9], r[1]))) for r in pair_rows]
+    )
+    schema = pa.schema([("i", pa.int64()), ("a_start_km", pa.float64())])
+    out = pa.Table.from_batches(
+        U.map_pairs(
+            [batch.slice(7, 40)], ("g_xs", "g_ys", "o_xs", "o_ys"), schema,
+            lambda na, nb: (4 * na - 3) * nb,
+            lambda *g: K.corridor_match_batch(*g, radius_km=SJ.CORRIDOR_KM),
+        ),
+        schema=schema,
+    )
+    assert sorted(out.column("i").to_pylist()) == [i for i in sorted(want_refine) if 7 <= i < 47]
