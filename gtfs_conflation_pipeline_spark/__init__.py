@@ -17,4 +17,4 @@ Layout:
   plans/       pipeline stage orchestration (the reference's 9 CLI stages)
 """
 
-__version__ = "0.8.1"
+__version__ = "0.8.2"

@@ -5,9 +5,14 @@ own SQLite file (DbService/index.js:27-54) — re-running a stage is safe
 because it drops/recreates its tables in one transaction. Our analog
 (north-rule requirement): every stage writes Parquet (Iceberg-shaped layout:
 ``data/`` + ``_manifest/``), plus a per-partition lineage manifest recording
-rows out, key extents and metric counters. A stage whose manifest is complete
-is skipped on re-run (idempotent resume); a partial write (no manifest) is
-overwritten atomically by the next run.
+rows out, cells touched and metric counters. A stage whose manifest is
+complete is skipped on re-run (idempotent resume); a partial write (no
+manifest) is overwritten atomically by the next run.
+
+A stage is computed exactly once: the write is its only job over the
+uncommitted lineage. Per-file lineage is read from the Parquet footers of
+the committed files (no Spark job), and the stage's ``metrics_fn`` runs on
+the committed table, never on the lineage that produced it.
 
 No Iceberg jars ship in this sandbox; the layout and commit protocol are
 Iceberg-compatible (atomic replace of data + manifest marker) so the write
@@ -16,14 +21,16 @@ format can be swapped via config on a real cluster.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import time
 from collections.abc import Callable
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .sources import bucketed as B
 
@@ -99,7 +106,7 @@ class CheckpointManager:
         self,
         df: DataFrame,
         stage: str,
-        metrics: dict | None = None,
+        metrics_fn: Callable[[DataFrame], dict] | None = None,
         cell_col: str | None = None,
         num_files: int | None = None,
         rows_in_from: str | None = None,
@@ -110,9 +117,15 @@ class CheckpointManager:
     ) -> DataFrame:
         """Write a stage output + per-partition lineage manifest.
 
-        Lineage per written partition: rows_out, and (if ``cell_col`` is a
-        column of cell/tile ids) the count of distinct cells touched — the
-        north rule's per-partition metrics (rows in/out, cells touched).
+        Lineage per written file (== written partition), read from the
+        Parquet footers under ``data/``: rows_out, and (if ``cell_col`` is a
+        column of cell/tile ids) the exact count of distinct cells in that
+        file — the north rule's per-partition metrics (rows in/out, cells
+        touched). Zero-row files are not partitions.
+
+        ``metrics_fn`` is applied to the COMMITTED table (re-read from
+        ``data/``) before the manifest commit, so recording metrics never
+        recomputes the stage. ``wall_sec`` covers write + metrics + lineage.
 
         ``partition_by``: hive-style partition columns (the parquet analog
         of an Iceberg partition spec) — downstream queries that filter on
@@ -162,15 +175,8 @@ class CheckpointManager:
             writer.parquet(d)
             out = spark.read.parquet(d)
 
-        # per-file (== per written partition) lineage rows
-        agg = [F.count(F.lit(1)).alias("rows_out")]
-        if cell_col and cell_col in out.columns:
-            agg.append(F.approx_count_distinct(cell_col).alias("cells_touched"))
-        part_rows = (
-            out.groupBy(F.input_file_name().alias("file"))
-            .agg(*agg)
-            .collect()
-        )
+        metrics = metrics_fn(out) if metrics_fn else {}
+        parts = _file_lineage(d, cell_col if cell_col in out.columns else None)
         rows_in = None
         if rows_in_from and self.is_complete(rows_in_from):
             rows_in = self.manifest(rows_in_from).get("rows_out")
@@ -181,22 +187,11 @@ class CheckpointManager:
             "rows_in_from": rows_in_from,
             "written_at": time.time(),
             "wall_sec": round(time.time() - t0, 3),
-            "rows_out": sum(r["rows_out"] for r in part_rows),
-            "n_partitions": len(part_rows),
+            "rows_out": sum(p["rows_out"] for p in parts),
+            "n_partitions": len(parts),
             "bucketed": bucket_spec,
-            "partitions": [
-                {
-                    "file": os.path.basename(r["file"]),
-                    "rows_out": r["rows_out"],
-                    **(
-                        {"cells_touched": r["cells_touched"]}
-                        if "cells_touched" in r.asDict()
-                        else {}
-                    ),
-                }
-                for r in part_rows
-            ],
-            "metrics": metrics or {},
+            "partitions": parts,
+            "metrics": metrics,
         }
         with open(tmp_manifest, "w") as f:
             json.dump(manifest, f, indent=1)
@@ -204,37 +199,42 @@ class CheckpointManager:
         return out
 
     def run_stage(
-        self,
-        spark: SparkSession,
-        stage: str,
-        fn: Callable[[], DataFrame],
-        metrics_fn: Callable[[DataFrame], dict] | None = None,
-        cell_col: str | None = None,
-        num_files: int | None = None,
-        rows_in_from: str | None = None,
-        bucket_by: list[str] | None = None,
-        n_buckets: int = 32,
-        sort_by: list[str] | None = None,
+        self, spark: SparkSession, stage: str, fn: Callable[[], DataFrame], **write_kw
     ) -> DataFrame:
         """Compute-or-resume: skip ``fn`` entirely if the stage's manifest is
-        complete (the reference's per-stage re-runnability, run:41-49)."""
+        complete (the reference's per-stage re-runnability, run:41-49);
+        otherwise commit ``fn()`` via ``write(**write_kw)``. Every job of the
+        compute + commit carries the job description ``checkpoint:<stage>``;
+        the caller's description is restored after."""
         if self.is_complete(stage):
             if self.verbose:
                 print(f"[ckpt] resume {stage}: skipping compute")
             return self.read(spark, stage)
-        df = fn()
-        metrics = metrics_fn(df) if metrics_fn else None
-        return self.write(
-            df,
-            stage,
-            metrics=metrics,
-            cell_col=cell_col,
-            num_files=num_files,
-            rows_in_from=rows_in_from,
-            bucket_by=bucket_by,
-            n_buckets=n_buckets,
-            sort_by=sort_by,
-        )
+        sc = spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"checkpoint:{stage}")
+        try:
+            return self.write(fn(), stage, **write_kw)
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
 
     def invalidate(self, stage: str) -> None:
         shutil.rmtree(self._dir(stage), ignore_errors=True)
+
+
+def _file_lineage(data_dir: str, cell_col: str | None) -> list[dict]:
+    """Per-file lineage rows of a committed stage, read from the Parquet
+    footers under ``data_dir`` (recursively, so partition_by directories
+    count), sorted by path; zero-row files are skipped. ``cells_touched`` is
+    the exact distinct count of ``cell_col``, read from that file alone."""
+    pattern = os.path.join(glob.escape(data_dir), "**", "*.parquet")
+    parts = []
+    for path in sorted(glob.glob(pattern, recursive=True)):
+        n = pq.read_metadata(path).num_rows
+        if n:
+            part = {"file": os.path.basename(path), "rows_out": n}
+            if cell_col:
+                cells = pq.read_table(path, columns=[cell_col]).column(0)
+                part["cells_touched"] = pc.count_distinct(cells).as_py()
+            parts.append(part)
+    return parts

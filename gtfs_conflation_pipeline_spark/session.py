@@ -139,9 +139,3 @@ def ensure_shipped(spark: SparkSession) -> None:
         return
     spark.sparkContext.addPyFile(build_pyfiles_zip())
     spark._gtfs_pkg_shipped = True
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
