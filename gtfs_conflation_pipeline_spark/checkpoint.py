@@ -14,6 +14,15 @@ uncommitted lineage. Per-file lineage is read from the Parquet footers of
 the committed files (no Spark job), and the stage's ``metrics_fn`` runs on
 the committed table, never on the lineage that produced it.
 
+A pipeline is a stage GRAPH (``CheckpointManager.run_graph``): each
+``Stage`` names its dependencies, and a stage is committed on its own thread
+as soon as every dependency is committed (or resumed), so independent stages
+overlap their fixed costs and fill idle cores. The only bound on
+concurrency is the graph's width; there is no serial mode. On the first
+failure nothing new is started, the stages already running finish (their
+commits stay valid for resume), and the failure is re-raised; every thread
+is joined before ``run_graph`` returns.
+
 No Iceberg jars ship in this sandbox; the layout and commit protocol are
 Iceberg-compatible (atomic replace of data + manifest marker) so the write
 format can be swapped via config on a real cluster.
@@ -26,15 +35,38 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Mapping, Sequence
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from functools import partial
+from types import MappingProxyType
+from typing import NamedTuple
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from .sources import bucketed as B
 
 MANIFEST = "_manifest.json"
+# footer key under which Spark's Parquet writer records the written schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+class Stage(NamedTuple):
+    """One node of a stage graph (``CheckpointManager.run_graph``).
+
+    ``fn(inputs)`` builds the stage's DataFrame from ``inputs``, a read-only
+    mapping holding the committed frames of ``deps`` and nothing else, so an
+    undeclared read raises ``KeyError``. ``write`` holds the keyword
+    arguments of the commit (``CheckpointManager.write``); a ``metrics_fn``
+    there is called as ``metrics_fn(inputs, committed)``."""
+
+    name: str
+    deps: tuple[str, ...]
+    fn: Callable[[Mapping[str, DataFrame]], DataFrame]
+    write: dict = {}
 
 
 class CheckpointManager:
@@ -83,7 +115,7 @@ class CheckpointManager:
         if os.path.exists(self._manifest_path(stage)):
             spec = self.manifest(stage).get("bucketed")
         if not spec:
-            return spark.read.parquet(self._data(stage))
+            return _read_parquet(spark, self._data(stage))
         tbl = spec["table"]
         d = self._data(stage)
         if B.table_location(spark, tbl) != d:
@@ -173,7 +205,7 @@ class CheckpointManager:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(d)
-            out = spark.read.parquet(d)
+            out = _read_parquet(spark, d)
 
         metrics = metrics_fn(out) if metrics_fn else {}
         parts = _file_lineage(d, cell_col if cell_col in out.columns else None)
@@ -205,7 +237,11 @@ class CheckpointManager:
         complete (the reference's per-stage re-runnability, run:41-49);
         otherwise commit ``fn()`` via ``write(**write_kw)``. Every job of the
         compute + commit carries the job description ``checkpoint:<stage>``;
-        the caller's description is restored after."""
+        the caller's description is restored after.
+
+        Safe to call for different stages from concurrent threads of one
+        session (``run_graph`` does): the description is a thread-local
+        property, and each stage writes only its own directory."""
         if self.is_complete(stage):
             if self.verbose:
                 print(f"[ckpt] resume {stage}: skipping compute")
@@ -218,8 +254,100 @@ class CheckpointManager:
         finally:
             sc.setLocalProperty("spark.job.description", prev)
 
+    def run_graph(
+        self,
+        spark: SparkSession,
+        stages: Sequence[Stage],
+        given: Mapping[str, DataFrame] | None = None,
+    ) -> dict[str, DataFrame]:
+        """Commit-or-resume every stage of a dependency graph; returns the
+        committed frame of each stage by name.
+
+        ``stages`` is in a topological order (every dep is an earlier stage
+        or a ``given`` frame). Each stage goes to ``run_stage`` on its own
+        thread as soon as all its deps are committed; the thread inherits
+        the caller's job group and local properties, so every job still
+        carries ``checkpoint:<stage>`` under the caller's group. Outputs do
+        not depend on the schedule: a stage sees only its committed inputs.
+
+        On the first failure no further stage is started, the stages already
+        running are waited for (their commits stay valid for resume), and
+        that failure is re-raised. Every thread is joined before return.
+        Since stages share one session concurrently, stage code must never
+        mutate session-level conf."""
+        frames = dict(given or {})
+        _check_graph(stages, frames)
+        waiting = list(stages)
+        running: dict = {}  # future -> stage name
+        failure: BaseException | None = None
+        with ThreadPoolExecutor(max_workers=max(1, len(stages))) as pool:
+            while True:
+                if failure is None:
+                    for s in [s for s in waiting if all(d in frames for d in s.deps)]:
+                        waiting.remove(s)
+                        running[pool.submit(self._commit_task(spark, s, frames))] = s.name
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in finished:
+                    name = running.pop(fut)
+                    try:
+                        frames[name] = fut.result()
+                    except BaseException as e:
+                        failure = failure or e
+        if failure is not None:
+            raise failure
+        return {s.name: frames[s.name] for s in stages}
+
+    def _commit_task(
+        self, spark: SparkSession, stage: Stage, frames: dict[str, DataFrame]
+    ) -> Callable[[], DataFrame]:
+        """``run_stage`` for one graph stage, bound to its inputs and wrapped
+        to carry the calling thread's Spark local properties (captured
+        here, on the scheduling thread) into the worker thread."""
+        inputs = MappingProxyType({d: frames[d] for d in stage.deps})
+        kw = dict(stage.write)
+        if "metrics_fn" in kw:
+            kw["metrics_fn"] = partial(kw["metrics_fn"], inputs)
+        task = partial(self.run_stage, spark, stage.name, partial(stage.fn, inputs), **kw)
+        return inheritable_thread_target(spark)(task)
+
     def invalidate(self, stage: str) -> None:
         shutil.rmtree(self._dir(stage), ignore_errors=True)
+
+
+def _check_graph(stages: Sequence[Stage], given: Mapping[str, DataFrame]) -> None:
+    """Reject a graph ``run_graph`` could not run deterministically: a
+    duplicate or shadowing name, a dep that is neither given nor an earlier
+    stage, or a ``rows_in_from`` stage of this graph that is not an
+    ancestor (its manifest might not be committed yet)."""
+    names = {s.name for s in stages}
+    ancestors: dict[str, set[str]] = {}
+    for s in stages:
+        if s.name in ancestors or s.name in given:
+            raise ValueError(f"stage {s.name!r} is declared twice")
+        missing = [d for d in s.deps if d not in ancestors and d not in given]
+        if missing:
+            raise ValueError(f"stage {s.name!r}: deps {missing} are not earlier stages or given")
+        ancestors[s.name] = set(s.deps).union(*(ancestors.get(d, ()) for d in s.deps))
+        src = s.write.get("rows_in_from")
+        if src in names and src not in ancestors[s.name]:
+            raise ValueError(f"stage {s.name!r}: rows_in_from {src!r} is not an ancestor")
+
+
+def _read_parquet(spark: SparkSession, data_dir: str) -> DataFrame:
+    """Scan a plain-Parquet stage directory with the Spark schema its writer
+    recorded in the file footers, so opening it runs no schema-inference
+    job. The frame equals an inferring ``spark.read.parquet``: every field
+    nullable, and partition columns discovered from the directory names,
+    typed by inference and placed last. Files without the footer key (not
+    written by Spark) fall back to inference."""
+    files = _parquet_files(data_dir)
+    meta = (pq.read_schema(files[0]).metadata if files else None) or {}
+    if SPARK_SCHEMA_KEY not in meta:
+        return spark.read.parquet(data_dir)
+    schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(data_dir)
 
 
 def _file_lineage(data_dir: str, cell_col: str | None) -> list[dict]:
@@ -227,9 +355,8 @@ def _file_lineage(data_dir: str, cell_col: str | None) -> list[dict]:
     footers under ``data_dir`` (recursively, so partition_by directories
     count), sorted by path; zero-row files are skipped. ``cells_touched`` is
     the exact distinct count of ``cell_col``, read from that file alone."""
-    pattern = os.path.join(glob.escape(data_dir), "**", "*.parquet")
     parts = []
-    for path in sorted(glob.glob(pattern, recursive=True)):
+    for path in _parquet_files(data_dir):
         n = pq.read_metadata(path).num_rows
         if n:
             part = {"file": os.path.basename(path), "rows_out": n}
@@ -238,3 +365,10 @@ def _file_lineage(data_dir: str, cell_col: str | None) -> list[dict]:
                 part["cells_touched"] = pc.count_distinct(cells).as_py()
             parts.append(part)
     return parts
+
+
+def _parquet_files(data_dir: str) -> list[str]:
+    """Every Parquet file under ``data_dir`` (recursively, so partition_by
+    directories count), sorted by path."""
+    pattern = os.path.join(glob.escape(data_dir), "**", "*.parquet")
+    return sorted(glob.glob(pattern, recursive=True))

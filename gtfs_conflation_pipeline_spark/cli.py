@@ -119,7 +119,7 @@ def cmd_load_conflation_map(spark: SparkSession, args) -> None:
 
 
 # reference CLI command -> last engine stage it materializes (run_from_raw
-# computes stages in dependency order and stops at `upto`)
+# commits every stage declared up to and including `upto`)
 STAGE_UPTO = {
     "gtfs_as_geojson": "geo_stops",
     "gtfs_network": "net_segments",

@@ -516,21 +516,22 @@ def raw_tables(spark: SparkSession, images: DataFrame) -> dict[str, DataFrame]:
         )
     )
 
-    calendar = spark.createDataFrame(
-        [
-            ("svc_wk", 1, 1, 1, 1, 1, 0, 0, "20240101", "20240128"),
-            ("svc_we", 0, 0, 0, 0, 0, 1, 1, "20240101", "20240128"),
-        ],
-        "service_id string, monday int, tuesday int, wednesday int, thursday int,"
-        " friday int, saturday int, sunday int, start_date string, end_date string",
+    # the literal tables are VALUES relations: a LocalTableScan in the JVM,
+    # with no RDD and no Python worker behind it
+    calendar = spark.sql(
+        "SELECT * FROM VALUES"
+        " ('svc_wk', 1, 1, 1, 1, 1, 0, 0, '20240101', '20240128'),"
+        " ('svc_we', 0, 0, 0, 0, 0, 1, 1, '20240101', '20240128')"
+        " AS t(service_id, monday, tuesday, wednesday, thursday, friday, saturday,"
+        " sunday, start_date, end_date)"
     )
-    calendar_dates = spark.createDataFrame(
-        [("svc_wk", "20240115", 2), ("svc_we", "20240116", 1)],
-        "service_id string, date string, exception_type int",
+    calendar_dates = spark.sql(
+        "SELECT * FROM VALUES ('svc_wk', '20240115', 2), ('svc_we', '20240116', 1)"
+        " AS t(service_id, date, exception_type)"
     )
-    feed_info = spark.createDataFrame(
-        [("synthetic-fixture", "20240101", "20240128")],
-        "feed_publisher_name string, feed_start_date string, feed_end_date string",
+    feed_info = spark.sql(
+        "SELECT * FROM VALUES ('synthetic-fixture', '20240101', '20240128')"
+        " AS t(feed_publisher_name, feed_start_date, feed_end_date)"
     )
 
     return {

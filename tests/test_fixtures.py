@@ -128,6 +128,40 @@ def test_raw_tables_consistent(spark):
     assert set(st.trip_id) == set(trips.trip_id)
 
 
+def test_literal_raw_tables_are_jvm_local(spark):
+    """calendar, calendar_dates and feed_info keep the rows and types of
+    their GTFS literals, and run as a JVM LocalTableScan: no RDD scan, so
+    no PythonRDD and no Python worker is involved."""
+    img = FX.images_table(spark, 100, partitions=2, with_bytes=False)
+    raw = FX.raw_tables(spark, img)
+    expected = {
+        "calendar": (
+            [
+                ("svc_wk", 1, 1, 1, 1, 1, 0, 0, "20240101", "20240128"),
+                ("svc_we", 0, 0, 0, 0, 0, 1, 1, "20240101", "20240128"),
+            ],
+            "service_id string, monday int, tuesday int, wednesday int, thursday int,"
+            " friday int, saturday int, sunday int, start_date string, end_date string",
+        ),
+        "calendar_dates": (
+            [("svc_wk", "20240115", 2), ("svc_we", "20240116", 1)],
+            "service_id string, date string, exception_type int",
+        ),
+        "feed_info": (
+            [("synthetic-fixture", "20240101", "20240128")],
+            "feed_publisher_name string, feed_start_date string, feed_end_date string",
+        ),
+    }
+    for name, (rows, ddl) in expected.items():
+        df = raw[name]
+        want = [c.strip().split(" ") for c in ddl.split(",")]
+        assert [list(t) for t in df.dtypes] == want, name
+        assert [tuple(r) for r in df.collect()] == rows, name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, name
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, name
+
+
 def test_disk_layout_back_compat_and_window_bounds():
     """0.8.1 constant-density disks: disk 0 must reproduce the pre-0.8.1
     single-disk layout BIT-EXACTLY (every test/bench scale <= 4M images

@@ -142,15 +142,29 @@ def test_cli_stage_commands_roundtrip(spark, raw, tmp_path):
     )
 
     args = SimpleNamespace(work_dir=work)
-    cli._run_stages(spark, args, "gtfs_osm_network")
     ck = CheckpointManager(f"{work}/stages")
+
+    def materialized():
+        return {s for s in os.listdir(ck.root) if ck.is_complete(s)}
+
+    # each command commits the stages declared up to its last one, no more
+    cli._run_stages(spark, args, "gtfs_as_geojson")
+    assert materialized() == {"geo_shapes", "geo_stops"}
+    cli._run_stages(spark, args, "gtfs_osm_network")
     for st in ["geo_shapes", "net_segments", "matches", "match_paths", "match_scores"]:
         assert ck.is_complete(st), st
+    for st in ["service_dates", "scheduled_traffic"]:
+        assert not os.path.exists(os.path.join(ck.root, st, "_manifest.json")), st
     # resume + widen: the map-join command reuses completed stages
     cli._run_stages(spark, args, "gtfs_conflation_map_join")
     assert ck.is_complete("tiles") and ck.is_complete("cospatiality")
     assert ck.read(spark, "matches").count() > 0
     assert ck.read(spark, "match_paths").count() > 0
+
+    from gtfs_conflation_pipeline_spark.plans.pipeline import run_from_raw
+
+    with pytest.raises(ValueError, match="unknown stage"):
+        run_from_raw(spark, {}, ck.read(spark, "matches"), ck, upto="no_such_stage")
 
 
 def test_bucketed_join_is_shuffle_free(spark, raw, tmp_path):
