@@ -3,8 +3,8 @@
 A from-scratch re-expression of the query semantics of
 availabs/gtfs-conflation-pipeline (Node.js + SQLite, see /root/reference) as an
 idiomatic PySpark engine: DataFrame/SQL plans optimized by Catalyst, with
-Arrow-vectorized numpy kernels (pandas_udf / applyInPandas) for the geometry
-hot path. No per-row Python UDFs anywhere.
+numpy kernels behind one Arrow boundary (mapInArrow, functions.udfs) for the
+geometry hot path. No per-row Python UDFs anywhere.
 
 Layout:
   kernels      pure-numpy geometry kernels (each one a re-spec of a turf.js

@@ -21,9 +21,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import kernels as K
 
@@ -181,9 +183,10 @@ def images_batch(i: np.ndarray, with_bytes: bool = True) -> pd.DataFrame:
     )
 
 
-def osm_segment_batch(seg_ids: np.ndarray) -> pd.DataFrame:
+def osm_segment_batch(seg_ids: np.ndarray) -> pa.RecordBatch:
     """OSM-side segments (the conflation-map / SharedStreets analog,
-    reference ConflationMapDAO/createTableFns.js:3-22).
+    reference ConflationMapDAO/createTableFns.js:3-22), as an Arrow batch
+    of OSM_SCHEMA.
 
     Segment c of shape s covers shape points [c*CHUNK, (c+1)*CHUNK].
     Deterministic perturbations exercise the matcher (FIXTURES.md §3):
@@ -207,14 +210,7 @@ def osm_segment_batch(seg_ids: np.ndarray) -> pd.DataFrame:
         rows.append((int(g), s, c, lon, lat, 0))
         if mode == 2:
             rows.append((int(g), s, c, lon, K.round6(lat + 3e-3), 1))
-    out = {
-        "segment_id": [],
-        "shst_reference": [],
-        "networklevel": [],
-        "length_km": [],
-        "xs": [],
-        "ys": [],
-    }
+    out = {f.name: [] for f in OSM_SCHEMA.fields}
     for g, s, c, lon, lat, distractor in rows:
         out["segment_id"].append(g * 2 + distractor)
         out["shst_reference"].append(
@@ -224,9 +220,7 @@ def osm_segment_batch(seg_ids: np.ndarray) -> pd.DataFrame:
         out["length_km"].append(K.polyline_length_km(lon, lat))
         out["xs"].append(lon)
         out["ys"].append(lat)
-    from .functions.udfs import arrow_frame
-
-    return arrow_frame(out)
+    return pa.RecordBatch.from_pydict(out, schema=_OSM_ARROW)
 
 
 def n_shapes_for(n_images: int) -> int:
@@ -268,6 +262,7 @@ OSM_SCHEMA = T.StructType(
         T.StructField("ys", T.ArrayType(T.DoubleType()), False),
     ]
 )
+_OSM_ARROW = to_arrow_schema(OSM_SCHEMA)
 
 
 def images_table(
@@ -293,10 +288,10 @@ def osm_segments_table(
     n_seg_slots = n_shapes_for(n_images) * n_chunks
 
     def gen(batches):
-        for pdf in batches:
-            yield osm_segment_batch(pdf["id"].values)
+        for batch in batches:
+            yield osm_segment_batch(batch.column("id").to_numpy())
 
-    return spark.range(0, n_seg_slots, numPartitions=parts).mapInPandas(gen, OSM_SCHEMA)
+    return spark.range(0, n_seg_slots, numPartitions=parts).mapInArrow(gen, OSM_SCHEMA)
 
 
 AUDIO_SCHEMA = T.StructType(

@@ -1,14 +1,16 @@
-"""Arrow-vectorized UDF wrappers and the packed-pair kernel boundary.
+"""The one Python<->JVM kernel boundary: mapInArrow over Arrow buffers.
 
-These are the ONLY Python entry points on the hot path — every one receives
-Arrow batches and runs numpy kernels; no per-row Python UDFs exist in this
-engine (north-rule requirement; enforced by tests/test_no_row_udfs.py).
-
-Pair kernels (refine, cospatiality, scoring) run under mapInArrow and share
-one boundary: `pack_slabs` groups a batch's rows by vertex counts read off
-the Arrow list offsets, `gather` stacks each slab straight out of the flat
-list buffer, and `emit` builds the output batch with passthrough columns
-taken in Arrow (strings and ids never become Python objects).
+Every Python kernel on the conflation chain -- net_segments (snap), refine,
+the chooser, tiles, cospatiality and scoring -- runs under mapInArrow and
+reads its list columns as flat buffers plus row offsets (`list_buffers`,
+`flat_index`), never as per-row Python objects; no per-row Python UDFs
+exist in this engine (north-rule requirement; enforced by
+tests/test_no_row_udfs.py). Pair kernels group a batch's rows by vertex
+counts read off the offsets (`pack_slabs`) and stack each slab straight out
+of the flat buffer (`gather`). Every kernel builds its output batch with
+`emit`: passthrough columns are taken in Arrow (strings and ids never
+become Python objects), kernel outputs are numpy arrays, per-row numpy
+arrays for list columns, or Arrow arrays.
 """
 
 from __future__ import annotations
@@ -18,8 +20,10 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import kernels as K
 
@@ -42,6 +46,13 @@ def list_buffers(col: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
     offsets are absolute into `.values`, also on sliced batches — never
     pair them with `.flatten()`, which drops the slice prefix."""
     return col.values.to_numpy(zero_copy_only=False), col.offsets.to_numpy()
+
+
+def flat_index(offsets: np.ndarray, rows: np.ndarray) -> np.ndarray:
+    """Absolute `.values` indices of the list elements of `rows`, row after
+    row: the flat-buffer view of those rows' lists."""
+    lens = offsets[rows + 1] - offsets[rows]
+    return np.repeat(offsets[rows] - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())
 
 
 def pack_slabs(
@@ -74,25 +85,48 @@ def gather(values: np.ndarray, offsets: np.ndarray, rows: np.ndarray, n: int) ->
     return values[offsets[rows, None] + np.arange(n)]
 
 
+def _column(parts: list, typ: pa.DataType) -> pa.Array:
+    """Concatenate one output column's per-slab parts: Arrow arrays, lists
+    of per-row numpy arrays (list types) or numpy arrays."""
+    if parts and isinstance(parts[0], pa.Array):
+        return pa.concat_arrays([p.cast(typ) for p in parts])
+    if pa.types.is_list(typ):
+        lists = [a for p in parts for a in p]
+        offsets = np.zeros(len(lists) + 1, np.int32)
+        np.cumsum([len(a) for a in lists], out=offsets[1:])
+        values = pa.array(np.concatenate(lists) if lists else [], typ.value_type)
+        return pa.ListArray.from_arrays(offsets, values, type=typ)
+    return pa.array(np.concatenate(parts) if parts else [], typ)
+
+
 def emit(
     batch: pa.RecordBatch, schema: pa.Schema, rows: list, outs: list
 ) -> pa.RecordBatch:
     """Kernel output batch. `rows` are the kept input-row indices per slab,
-    `outs` the matching dicts of kernel output arrays. Schema fields that
-    the input batch carries are passed through with Arrow `take` (cast to
-    the schema type: with spark.sql.execution.arrow.useLargeVarTypes on,
-    strings arrive as large_string); the rest are the concatenated kernel
-    outputs."""
+    `outs` the matching dicts of kernel output columns. Kernel outputs are
+    concatenated (see `_column`); the other schema fields are passed
+    through from the input batch with Arrow `take` (cast to the schema
+    type: with spark.sql.execution.arrow.useLargeVarTypes on, strings
+    arrive as large_string)."""
     idx = np.concatenate([np.empty(0, np.int64), *rows])
+    computed = set().union(*outs)
     return pa.RecordBatch.from_arrays(
         [
-            batch.column(f.name).take(idx).cast(f.type)
-            if f.name in batch.schema.names
-            else pa.array(np.concatenate([np.empty(0), *(o[f.name] for o in outs)]), f.type)
+            _column([o[f.name] for o in outs], f.type)
+            if f.name in computed or f.name not in batch.schema.names
+            else batch.column(f.name).take(idx).cast(f.type)
             for f in schema
         ],
         schema=schema,
     )
+
+
+def map_arrow(df: DataFrame, body: Callable, schema: T.StructType | str) -> DataFrame:
+    """`df.mapInArrow` through this boundary: `body(batches, arrow_schema)`
+    yields the batches of `schema` (a StructType or a DDL string)."""
+    struct = T.DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    return df.mapInArrow(lambda batches: body(batches, arrow), struct)
 
 
 def map_pairs(
@@ -117,17 +151,6 @@ def map_pairs(
         yield emit(batch, schema, rows, outs)
 
 
-def arrow_frame(out: dict, object_cols: tuple[str, ...] = ("xs", "ys")) -> pd.DataFrame:
-    """Build a kernel-output DataFrame whose array columns survive Arrow
-    conversion even when EMPTY: a zero-row dict-of-lists otherwise yields
-    float64 columns that Arrow cannot cast to list<double>."""
-    df = pd.DataFrame({k: v for k, v in out.items() if k not in object_cols})
-    for c in object_cols:
-        if c in out:
-            df[c] = pd.Series(out[c], dtype=object)
-    return df[list(out.keys())]
-
-
 @F.pandas_udf(T.DoubleType())
 def length_km(xs: pd.Series, ys: pd.Series) -> pd.Series:
     """Polyline haversine length (turf.length) per row."""
@@ -140,52 +163,3 @@ def length_km(xs: pd.Series, ys: pd.Series) -> pd.Series:
 def cell_of(lon: pd.Series, lat: pd.Series, cell_deg: pd.Series) -> pd.Series:
     """Morton cell id of a point at the given resolution."""
     return pd.Series(K.cell_id(lon.values, lat.values, float(cell_deg.iloc[0])))
-
-
-def make_tiles_udf(zoom_by_row: bool = True):
-    """Tile keys covering a polyline at its per-row zoom.
-
-    Batch-vectorized (round 7): rows are grouped by zoom (<= 6 distinct
-    min-zoom values exist) and each group runs ONE lonlat_to_tile +
-    lexsort-unique pass over the concatenated vertices — the per-row loop
-    with a structured np.unique(axis=0) per polyline was dispatch-bound
-    (same disease as the round-2 cover-cell fix). Per-row tile SETS and
-    their order are identical to tiles_for_polyline: tile_key is injective
-    on (fixed zoom, xt, yt) and monotone in (xt, yt), so key-sorted unique
-    == pair-lexsorted unique."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def tiles_of(xs: pd.Series, ys: pd.Series, zoom: pd.Series) -> pd.Series:
-        out: list = [None] * len(xs)
-        by_zoom: dict[int, list[int]] = {}
-        for i, z in enumerate(zoom):
-            by_zoom.setdefault(int(z), []).append(i)
-        xv = xs.values
-        yv = ys.values
-        for z, idxs in by_zoom.items():
-            arrs = [np.asarray(xv[i], dtype=np.float64) for i in idxs]
-            lens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=len(arrs))
-            if int(lens.sum()) == 0:
-                for i in idxs:
-                    out[i] = np.empty(0, dtype=np.int64)
-                continue
-            lon = np.concatenate(arrs)
-            lat = np.concatenate(
-                [np.asarray(yv[i], dtype=np.float64) for i in idxs]
-            )
-            xt, yt = K.lonlat_to_tile(lon, lat, z)
-            key = K.tile_key(z, xt, yt)
-            row_id = np.repeat(np.arange(len(idxs)), lens)
-            order = np.lexsort((key, row_id))
-            rs, ks = row_id[order], key[order]
-            new = np.empty(ks.size, dtype=bool)
-            new[0] = True
-            new[1:] = (rs[1:] != rs[:-1]) | (ks[1:] != ks[:-1])
-            ur, uk = rs[new], ks[new]
-            bounds = np.searchsorted(ur, np.arange(len(idxs) + 1))
-            for j, i in enumerate(idxs):
-                out[i] = uk[bounds[j] : bounds[j + 1]]
-        return pd.Series(out)
-
-    return tiles_of
-

@@ -4,8 +4,8 @@ Each kernel re-specifies a turf.js / SQLite-geopoly call made by the reference
 pipeline (availabs/gtfs-conflation-pipeline); citations point at the reference
 file that defines the semantics (thresholds, units, rounding). These are plain
 functions over numpy arrays so they are (a) unit-testable against scalar
-oracles and (b) directly wrappable as Arrow-vectorized pandas_udfs — no
-per-row Python ever touches Spark.
+oracles and (b) callable on the flat Arrow buffers of the mapInArrow
+boundary (functions.udfs) — no per-row Python UDF ever touches Spark.
 
 Units: distances km unless noted (RMSD is meters, matching
 reference src/services/Conflation/chooseShstMatchesForShape/
@@ -1036,18 +1036,6 @@ def sequentiality(a_end_lon, a_end_lat, b_start_lon, b_start_lat, a_bearing, b_b
 
 
 MERGE_GAP_KM = 0.002  # 2 m end→start merge tolerance (mergeLineStringsGeospatially.js)
-
-
-def bearing_split_indices(xs, ys, max_turn_deg: float = 67.5) -> np.ndarray:
-    """Vertex indices where bearing change exceeds max_turn_deg — reference
-    splitLineStringUsingSmoothness.js:8,50-81."""
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    if xs.size < 3:
-        return np.empty(0, dtype=np.int64)
-    b = bearing_deg(xs[:-1], ys[:-1], xs[1:], ys[1:])
-    turn = np.abs((np.diff(b) + 180.0) % 360.0 - 180.0)
-    return np.where(turn > max_turn_deg)[0] + 1
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import kernels as K
 from ..functions import udfs as U
@@ -107,9 +106,7 @@ def score_matches(matches: DataFrame, segments: DataFrame, osm: DataFrame) -> Da
     par = matches.sparkSession.sparkContext.defaultParallelism
     inp = inp.repartition(par)
 
-    schema = to_arrow_schema(SCORES_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def kernel(batches: Iterator[pa.RecordBatch], schema: pa.Schema) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             geo = [U.list_buffers(batch.column(c)) for c in ("g_xs", "g_ys", "o_xs", "o_ys")]
             ends = [
@@ -159,4 +156,4 @@ def score_matches(matches: DataFrame, segments: DataFrame, osm: DataFrame) -> Da
                 )
             yield U.emit(batch, schema, rows, outs)
 
-    return inp.mapInArrow(kernel, SCORES_SCHEMA)
+    return U.map_arrow(inp, kernel, SCORES_SCHEMA)

@@ -23,9 +23,9 @@ GtfsConflationMapJoinDAO/loaders.js:139-155 → 195-274):
      by (deviation, coverage): the observable semantics of the reference's
      path-choice fixpoint (chooseOptimalShstMatches) at fixture complexity,
      with fully specified tie-breaks (sort by score then shst_reference) so
-     engine == oracle bit-for-bit. The same UDF assigns the along-index:
-     the competition rank by section_start within each segment, the
-     reference's topological ordering of chosen segments
+     engine == oracle bit-for-bit. The same mapInArrow kernel assigns the
+     along-index: the competition rank by section_start within each
+     segment, the reference's topological ordering of chosen segments
      (GtfsConflationMapJoinDAO/loaders.js:357-366).
 
 Scale: the only shuffles are (a) the cell equi-join and (b) the per-segment
@@ -35,11 +35,15 @@ so the wide arrays cross the wire once.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from .. import kernels as K
@@ -260,8 +264,6 @@ def refine(pairs: DataFrame, corridor_km: float = CORRIDOR_KM) -> DataFrame:
     are value-identical (e2e oracle gate). Row order within a batch follows
     the packing; every consumer is order-free.
     """
-    schema = to_arrow_schema(REFINE_SCHEMA)
-
     def corridor(AX, AY, BX, BY):
         ok, m = K.corridor_match_batch(AX, AY, BX, BY, radius_km=corridor_km)
         return ok, {out_c: m[m_k] for out_c, m_k in _OUT_KEYS}
@@ -270,8 +272,9 @@ def refine(pairs: DataFrame, corridor_km: float = CORRIDOR_KM) -> DataFrame:
     # the session's 16 MB AQE advisory size the join output keeps enough
     # partitions for the CPU-bound kernel, so no extra repartition of the
     # heavy array payload is needed.
-    return pairs.mapInArrow(
-        lambda batches: U.map_pairs(
+    return U.map_arrow(
+        pairs,
+        lambda batches, schema: U.map_pairs(
             batches,
             ("g_xs", "g_ys", "o_xs", "o_ys"),
             schema,
@@ -280,6 +283,90 @@ def refine(pairs: DataFrame, corridor_km: float = CORRIDOR_KM) -> DataFrame:
         ),
         REFINE_SCHEMA,
     )
+
+
+CHOSEN_SCHEMA = T.StructType(
+    [*REFINE_SCHEMA.fields, T.StructField("along_idx", T.IntegerType())]
+)
+
+
+def _greedy_cover(a: np.ndarray, b: np.ndarray, first: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Keep mask of the greedy interval cover over candidates [a, b] that
+    are laid out segment after segment (segment g at first[g] .. first[g] +
+    n[g] - 1), each segment in greedy consideration order.
+
+    Round k decides the k-th candidate of every segment at once: it is kept
+    iff its interval is non-empty and <= OVERLAP_TOL of it is covered by
+    the segment's kept intervals. A kept candidate then adds its overlap
+    to every later candidate of its segment, so each overlap sum is
+    accumulated left to right in keep order, as Python's `sum` over the
+    kept intervals does (np.sum's pairwise blocks could change the last
+    bit, and with it a decision at the tolerance)."""
+    keep = np.zeros(a.size, bool)
+    ov = np.zeros(a.size)
+    end = np.repeat(first + n, n)
+    for k in range(int(n.max(initial=0))):
+        i = first[n > k] + k
+        w = b[i] - a[i]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            i = i[(w > 0) & (ov[i] / w <= OVERLAP_TOL)]
+        keep[i] = True
+        cnt = end[i] - i - 1
+        src = np.repeat(i, cnt)
+        dst = src + 1 + np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        ov[dst] += np.maximum(0.0, np.minimum(b[dst], b[src]) - np.maximum(a[dst], a[src]))
+    return keep
+
+
+def _choose(batches: Iterator[pa.RecordBatch], schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body of the chooser: one input row per GTFS segment with
+    its `cands` list; one output row per kept candidate with its along_idx.
+
+    The candidates' struct children are taken out of `.values` at the
+    list offsets (absolute, also on sliced batches). One lexsort orders the
+    whole batch by (segment, -intxn_len_km, mean_dev_km, shst_reference,
+    segment_id); shst_reference enters as its dense Arrow rank, and Arrow
+    string order is UTF-8 byte order, which equals Python str order. A
+    non-finite or null sort key raises: NaN has no place in that order."""
+    for batch in batches:
+        off = batch.column("cands").offsets.to_numpy()
+        rows = np.arange(batch.num_rows)
+        n = np.diff(off)
+        grp = np.repeat(rows, n)
+        cand = pa.RecordBatch.from_struct_array(batch.column("cands").values).take(
+            U.flat_index(off, rows)
+        )
+        a, b, dev, ln, seg = (
+            cand.column(c).to_numpy(zero_copy_only=False)
+            for c in ("section_start", "section_end", "mean_dev_km", "intxn_len_km", "segment_id")
+        )
+        if not np.isfinite(np.concatenate([a, b, dev])).all() or (
+            cand.column("shst_reference").null_count or cand.column("segment_id").null_count
+        ):
+            raise ValueError("choose_matches: non-finite or null sort key in a candidate")
+        ref = pc.rank(cand.column("shst_reference"), tiebreaker="dense").to_numpy()
+        order = np.lexsort((seg, ref, dev, -ln, grp))  # grp[order] == grp
+        a, b = a[order], b[order]
+        kept = np.flatnonzero(_greedy_cover(a, b, np.cumsum(n) - n, n))
+        # along-index: competition rank on (section_start, section_end,
+        # shst_reference) among each segment's kept candidates. Two kept
+        # intervals are never equal (the later one would be fully
+        # covered), so the rank is the position in (start, end) order.
+        kept = kept[np.lexsort((b[kept], a[kept], grp[kept]))]
+        g = grp[kept]
+        rank = np.arange(kept.size) - np.searchsorted(g, g) + 1
+        yield U.emit(
+            cand,
+            schema,
+            [order[kept]],
+            [
+                {
+                    "shape_id": batch.column("shape_id").take(g),
+                    "shape_index": batch.column("shape_index").take(g),
+                    "along_idx": rank,
+                }
+            ],
+        )
 
 
 def choose_matches(
@@ -295,66 +382,18 @@ def choose_matches(
     unmatched-length predicate, shstMatchFeatures.js:259-276).
 
     Physical shape: candidates are gathered per segment with collect_list
-    (one shuffle) and the greedy cover runs as a SCALAR pandas_udf over the
-    array column — one Python call per Arrow batch instead of one per group
-    (grouped applyInPandas costs ~5 ms/group, which serializes to minutes
-    when AQE coalesces small shuffles to few partitions). The along-index
-    RANK is computed inside the SAME UDF over the kept rows (each
-    collect_list group IS one rank partition): a Window after a Python eval
-    node costs a full re-Exchange + Sort on the very keys the groupBy just
-    partitioned by, because EvalPython operators report unknown output
-    partitioning to EnsureRequirements (round-7 plan audit: Exchange(60)
-    removed). rank() semantics reproduced exactly: competition ranking
-    (1,1,3) over (section_start, section_end, shst_reference) — float
-    compares are IEEE in both engines and the reference keys are ASCII, so
-    tie groups and hence ranks are identical."""
-
-    @F.pandas_udf(
-        T.ArrayType(
-            T.StructType(
-                [
-                    T.StructField("i", T.IntegerType()),
-                    T.StructField("r", T.IntegerType()),
-                ]
-            )
-        )
-    )
-    def choose_idx(cands: pd.Series) -> pd.Series:
-        out = []
-        for lst in cands:
-            order = sorted(
-                range(len(lst)),
-                key=lambda i: (
-                    -lst[i]["intxn_len_km"],
-                    lst[i]["mean_dev_km"],
-                    lst[i]["shst_reference"],
-                    lst[i]["segment_id"],
-                ),
-            )
-            intervals: list[tuple[float, float]] = []
-            keep: list[int] = []
-            for i in order:
-                a, b = lst[i]["section_start"], lst[i]["section_end"]
-                ov = sum(max(0.0, min(b, hi) - max(a, lo)) for lo, hi in intervals)
-                if (b - a) > 0 and ov / (b - a) <= OVERLAP_TOL:
-                    keep.append(i)
-                    intervals.append((a, b))
-            # along-index rank over the kept rows (loaders.js:357-366):
-            # competition rank on (section_start, section_end, shst_reference)
-            rk = lambda i: (  # noqa: E731
-                lst[i]["section_start"],
-                lst[i]["section_end"],
-                lst[i]["shst_reference"],
-            )
-            ordered = sorted(keep, key=rk)
-            ranks: dict[int, int] = {}
-            for pos, i in enumerate(ordered):
-                ranks[i] = ranks[ordered[pos - 1]] if pos > 0 and rk(i) == rk(
-                    ordered[pos - 1]
-                ) else pos + 1
-            out.append([(i, ranks[i]) for i in keep])
-        return pd.Series(out)
-
+    (one shuffle; none on the shape_id-bucketed `refined` stage) and the
+    cover runs under mapInArrow (`_choose`, the functions.udfs boundary):
+    one lexsort and a few vectorized rounds per Arrow batch, no per-group
+    Python call. The along-index RANK is computed in the SAME kernel over
+    the kept rows (each collect_list group IS one rank partition): a
+    Window after a Python eval node costs a full re-Exchange + Sort on the
+    very keys the groupBy just partitioned by, because Python operators
+    report unknown output partitioning to EnsureRequirements (round-7 plan
+    audit: Exchange(60) removed). rank() semantics reproduced exactly:
+    competition ranking (1,1,3) over (section_start, section_end,
+    shst_reference) — float compares are IEEE in both engines and string
+    order is byte order, so tie groups and hence ranks are identical."""
     filtered = refined.filter(
         F.col("intxn_len_km") / F.col("g_len_km") >= MIN_COVER_RATIO
     )
@@ -378,28 +417,7 @@ def choose_matches(
     grouped = filtered.groupBy("shape_id", "shape_index").agg(
         F.collect_list(F.struct(*cand_cols)).alias("cands")
     )
-    return (
-        grouped.withColumn("keep", choose_idx("cands"))
-        .select(
-            "shape_id",
-            "shape_index",
-            F.explode(
-                F.transform(
-                    "keep",
-                    lambda k: F.struct(
-                        F.element_at("cands", k["i"] + 1).alias("c"),
-                        k["r"].alias("r"),
-                    ),
-                )
-            ).alias("kc"),
-        )
-        .select(
-            "shape_id",
-            "shape_index",
-            *[F.col(f"kc.c.{c}").alias(c) for c in cand_cols],
-            F.col("kc.r").cast("int").alias("along_idx"),
-        )
-    )
+    return U.map_arrow(grouped, _choose, CHOSEN_SCHEMA)
 
 
 def remove_redundant_matches(
@@ -579,12 +597,11 @@ def map_segments_cospatiality(
         "segment_id_b",
     )
 
-    schema = to_arrow_schema(COSPATIALITY_SCHEMA)
-
     # cross-pair packing, same boundary as the flagship refine; outputs are
     # value-identical to the scalar kernel (asserted in tests)
-    return attached.mapInArrow(
-        lambda batches: U.map_pairs(
+    return U.map_arrow(
+        attached,
+        lambda batches, schema: U.map_pairs(
             batches,
             ("a_xs", "a_ys", "b_xs", "b_ys"),
             schema,

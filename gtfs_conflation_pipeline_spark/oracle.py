@@ -31,7 +31,7 @@ def oracle_conflation(n_images: int) -> dict[str, pd.DataFrame]:
 
     # osm side (all segments, brute force)
     n_chunks = FX.PTS_PER_SHAPE // FX.CHUNK
-    osm = FX.osm_segment_batch(np.arange(n_shapes * n_chunks))
+    osm = FX.osm_segment_batch(np.arange(n_shapes * n_chunks)).to_pandas()
 
     match_rows = []
     match_path_rows = []

@@ -95,17 +95,18 @@ def run_pipeline(
     ckpt_dir: str,
     partitions: int | None = None,
     verbose: bool = False,
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline over the synthetic image fixture;
     returns every stage's DataFrame (the raw_* tables excepted).
 
     ``n_buckets`` sizes every bucketed stage table (see run_from_raw): a
     bucketed SCAN is one task per bucket (buckets never split), so size it
-    to AT LEAST the target read parallelism — the rule of thumb is
-    n_buckets >= executor cores at deployment scale (32 matches local[32];
-    a 1000-executor cluster wants 4-16k). Outputs are identical at any
-    value (asserted in tests at 8 vs 64)."""
+    to AT LEAST the target read parallelism. The default is the session's
+    ``defaultParallelism`` (its total cores); a 1000-executor cluster
+    wants 4-16k. Outputs are identical at any value (asserted in tests at
+    8 vs 64)."""
+    n_buckets = n_buckets or spark.sparkContext.defaultParallelism
     ckpt = CheckpointManager(ckpt_dir, verbose=verbose)
     raw = _Raw(derived=("shapes", "stops"))
     stages = [
@@ -136,14 +137,15 @@ def run_from_raw(
     osm_segments: DataFrame,
     ckpt: CheckpointManager,
     upto: str | None = None,
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
 ) -> dict[str, DataFrame]:
     """Stages 2-9 over ANY raw GTFS tables + OSM segment table — the entry
     point a user of the reference CLI migrates to (cli.py wraps this).
     ``upto`` names the last stage to materialize (per-stage CLI semantics):
     every stage declared up to and including it runs, in the module
-    docstring's order, so its dependencies always do."""
-    stages = _stage_graph(_Raw(), n_buckets)
+    docstring's order, so its dependencies always do. ``n_buckets`` as in
+    run_pipeline (default: the session's ``defaultParallelism``)."""
+    stages = _stage_graph(_Raw(), n_buckets or spark.sparkContext.defaultParallelism)
     if upto is not None:
         names = [s.name for s in stages]
         if upto not in names:

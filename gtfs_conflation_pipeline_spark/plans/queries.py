@@ -1072,7 +1072,7 @@ def _pipeline(spark, n_images=1000):
 _SIG_WRITTEN: dict[str, str] = {}
 
 
-def _sig_ckpt(df, name: str, key: str = "") -> DataFrame:
+def _sig_ckpt(spark, df, name: str, key: str = "") -> DataFrame:
     """Materialize a (deterministic) signature table so the DuckDB oracle
     can read the EXACT values the Spark query joins on — the signature
     functions (simhash over Spark md5-48 word hashes, sign-LSH over HOF dot
@@ -1096,9 +1096,12 @@ def _sig_ckpt(df, name: str, key: str = "") -> DataFrame:
     32 minhash permutations) whose py4j construction alone costs 0.7-0.9 s
     per invocation — on the warm path (already written this process) the
     thunk is never called, so repeat invocations skip both the write AND
-    the construction."""
-    from pyspark.sql import SparkSession
+    the construction.
 
+    The table is read back through the caller's `spark`, never through
+    `SparkSession.getActiveSession()`: that is None on a thread other than
+    the one that built the session (stage and query threads) and can name
+    another session when several exist."""
     from .. import __version__
 
     path = f"/tmp/spark_graft_sig_cache_{__version__}/{name}"
@@ -1106,7 +1109,7 @@ def _sig_ckpt(df, name: str, key: str = "") -> DataFrame:
         frame = df() if callable(df) else df
         frame.write.mode("overwrite").parquet(path)
         _SIG_WRITTEN[name] = key
-    return SparkSession.getActiveSession().read.parquet(path)
+    return spark.read.parquet(path)
 
 
 def _sig_pq(name: str) -> str:
@@ -1138,6 +1141,7 @@ def q_minhash_lsh(spark, sf):
     verification (distinct word-3-gram shingles, the proven ngram_jaccard
     SQL) from that table in ANSI SQL."""
     banded = _sig_ckpt(
+        spark,
         lambda: dedup.minhash_banded(_docs_with_dups(spark, sf), "doc_id", "text"),
         "minhash_bands",
         key=sf,
@@ -1189,6 +1193,7 @@ def q_dedup_clusters(spark, sf):
     pytest oracle (tests/test_dedup_recall.py) remains the adversarial
     gate for chains/convergence."""
     pairs = _sig_ckpt(
+        spark,
         lambda: dedup.minhash_lsh_pairs(
             _docs_with_dups(spark, sf), "doc_id", "text", threshold=0.5
         ),
@@ -1221,6 +1226,7 @@ def q_simhash_pairs(spark, sf):
     brute-force O(n^2) bit_count(xor) self-join over the same signatures —
     the engine's pigeonhole-bucketed plan vs DuckDB's all-pairs scan."""
     sigs = _sig_ckpt(
+        spark,
         lambda: dedup.simhash48(_docs_with_dups(spark, sf), "doc_id", "text"),
         "simhash48",
         key=sf,
@@ -1247,7 +1253,7 @@ def q_phash_neardup(spark, sf):
     from .. import fixtures as FX
 
     img = FX.images_table(spark, 2000, partitions=8, with_bytes=False)
-    sigs = _sig_ckpt(lambda: img.select("image_id", "phash"), "phash")
+    sigs = _sig_ckpt(spark, lambda: img.select("image_id", "phash"), "phash")
     return dedup.phash_near_dups(sigs, max_hamming=4).orderBy("id_a", "id_b")
 
 
@@ -1275,6 +1281,7 @@ def q_lsh_ann(spark, sf):
     )
     planes = similarity._hyperplanes(64, 12)
     _sig_ckpt(
+        spark,
         lambda: emb.select(
             "vec_id",
             similarity.signature_bits(F.col("embedding"), planes).alias("sig"),
@@ -1380,6 +1387,7 @@ def q_embedding_neardup_lsh(spark, sf):
     emb = _emb_with_dups(spark, sf, limit=1 << 40)
     planes = similarity._hyperplanes(64, 12)
     _sig_ckpt(
+        spark,
         lambda: emb.select(
             F.col("vec_id").alias("id"),
             similarity.signature_bits(F.col("embedding"), planes).alias("sig"),
@@ -1425,7 +1433,7 @@ def q_image_embed_topk(spark, sf):
     from .. import fixtures as FX
 
     img = FX.images_table(spark, 500, partitions=8)
-    emb = _sig_ckpt(lambda: multimodal.image_embeddings(img), "image_emb")
+    emb = _sig_ckpt(spark, lambda: multimodal.image_embeddings(img), "image_emb")
     q = emb.orderBy("image_id").limit(10).select(
         F.col("image_id").alias("qid"), F.col("embedding").alias("qvec")
     )
@@ -1474,6 +1482,7 @@ def q_ivf_ann(spark, sf):
         cache[ck] = similarity.deterministic_centroids(emb, 16)
     cents = cache[ck]
     _sig_ckpt(
+        spark,
         lambda: similarity.ivf_assignments(emb, cents, nprobe=1).select(
             "vec_id", "centroid_id"
         ),
@@ -1481,6 +1490,7 @@ def q_ivf_ann(spark, sf):
         key=sf,
     )
     _sig_ckpt(
+        spark,
         lambda: similarity.ivf_assignments(q, cents, vec_col="qvec", nprobe=4).select(
             "qid", "centroid_id"
         ),

@@ -74,18 +74,19 @@ def test_caption_format():
 
 
 def test_shapes_are_smooth_and_long_enough():
-    # shapes should be a few km (exercises the >2km split path) and smooth
-    # (few bearing splits)
+    # shapes should be a few km and smooth (at most 3 vertices where the
+    # bearing turns by more than 67.5 deg)
     i = np.arange(FX.PTS_PER_SHAPE)
     _, _, lon, lat = FX.shape_point(i)
     L = K.polyline_length_km(lon, lat)
     assert 1.0 < L < 10.0
-    assert K.bearing_split_indices(lon, lat).size <= 3
+    b = K.bearing_deg(lon[:-1], lat[:-1], lon[1:], lat[1:])
+    assert (np.abs((np.diff(b) + 180.0) % 360.0 - 180.0) > 67.5).sum() <= 3
 
 
 def test_osm_segments_modes():
     n_chunks = FX.PTS_PER_SHAPE // FX.CHUNK
-    df = FX.osm_segment_batch(np.arange(20 * n_chunks))
+    df = FX.osm_segment_batch(np.arange(20 * n_chunks)).to_pandas()
     # dropped segments exist: slots where (s+c)%10==0 are absent
     slots = set()
     for g in np.arange(20 * n_chunks):

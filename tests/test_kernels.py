@@ -241,16 +241,6 @@ def test_cospatiality_disjoint_and_short():
     assert K.cospatiality_intervals([-74.0, -74.000001], [42.0, 42.0], b_x, b_y) is None
 
 
-def test_bearing_split():
-    # L-shaped line: 90-degree turn at index 2
-    xs = np.array([-74.0, -73.999, -73.998, -73.998, -73.998])
-    ys = np.array([42.0, 42.0, 42.0, 42.001, 42.002])
-    idx = K.bearing_split_indices(xs, ys)
-    assert list(idx) == [2]
-    # smooth line: no splits
-    assert K.bearing_split_indices(np.linspace(-74, -73.9, 20), np.full(20, 42.0)).size == 0
-
-
 def test_pip_square():
     ring_x = np.array([-74.01, -73.99, -73.99, -74.01, -74.01])
     ring_y = np.array([41.99, 41.99, 42.01, 42.01, 41.99])
@@ -634,3 +624,236 @@ def test_pair_operators_equal_scalar_across_batches(spark):
         schema=schema,
     )
     assert sorted(out.column("i").to_pylist()) == [i for i in sorted(want_refine) if 7 <= i < 47]
+
+
+def _reference_choose(lst):
+    """Plain-Python greedy cover + along-index rank over one segment's
+    candidate dicts: (kept index, along_idx) pairs, in keep order."""
+    from gtfs_conflation_pipeline_spark.operators.spatial_join import OVERLAP_TOL
+
+    order = sorted(
+        range(len(lst)),
+        key=lambda i: (
+            -lst[i]["intxn_len_km"],
+            lst[i]["mean_dev_km"],
+            lst[i]["shst_reference"],
+            lst[i]["segment_id"],
+        ),
+    )
+    intervals: list[tuple[float, float]] = []
+    keep: list[int] = []
+    for i in order:
+        a, b = lst[i]["section_start"], lst[i]["section_end"]
+        ov = sum(max(0.0, min(b, hi) - max(a, lo)) for lo, hi in intervals)
+        if (b - a) > 0 and ov / (b - a) <= OVERLAP_TOL:
+            keep.append(i)
+            intervals.append((a, b))
+    rk = lambda i: (  # noqa: E731
+        lst[i]["section_start"],
+        lst[i]["section_end"],
+        lst[i]["shst_reference"],
+    )
+    ordered = sorted(keep, key=rk)
+    ranks: dict[int, int] = {}
+    for pos, i in enumerate(ordered):
+        same = pos > 0 and rk(i) == rk(ordered[pos - 1])
+        ranks[i] = ranks[ordered[pos - 1]] if same else pos + 1
+    return [(i, ranks[i]) for i in keep]
+
+
+def test_chain_operators_equal_reference_across_batches(spark):
+    """Operator level, through the mapInArrow boundary: assign_tiles,
+    snap_and_slice and choose_matches with two rows per Arrow batch emit
+    exactly what the per-row references give -- tiles_for_polyline per
+    segment, the shape-local slice kernel per shape, and a plain-Python
+    greedy cover + rank per GTFS segment -- with identical doubles; the
+    kernel bodies also see an empty batch and a sliced one (list offsets
+    are absolute into `.values`)."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from gtfs_conflation_pipeline_spark import fixtures as FX
+    from gtfs_conflation_pipeline_spark.operators import snap, tiles
+    from gtfs_conflation_pipeline_spark.operators import spatial_join as SJ
+
+    rng = np.random.default_rng(11)
+
+    # --- tiles: 0-, 1- and many-vertex polylines at every min zoom
+    osm_rows = []
+    for i, n in enumerate((0, 1, 2, 3, 7, 12, 0, 1, 5, 40, 2, 9)):
+        xs = -74.0 + 0.3 * i + np.cumsum(rng.uniform(0.0, 0.02, n))
+        ys = 42.0 + np.cumsum(rng.uniform(-0.02, 0.02, n))
+        osm_rows.append((3000 + i, i % 6, xs.tolist(), ys.tolist()))
+    osm = spark.createDataFrame(
+        osm_rows, "segment_id long, networklevel int, xs array<double>, ys array<double>"
+    )
+    want_tiles = {
+        (sid, int(K.zoom_for_networklevel(np.array([nl]))[0]), int(t))
+        for sid, nl, xs, ys in osm_rows
+        for t in K.tiles_for_polyline(
+            np.asarray(xs), np.asarray(ys), int(K.zoom_for_networklevel(np.array([nl]))[0])
+        )
+    }
+
+    # --- net_segments: fixture shapes with a null stop_dists list, a null
+    # element, usable distances, 0- and 1-vertex shapes and a 1-stop shape
+    pts = np.arange(0, FX.PTS_PER_SHAPE)
+    stops = pts[:: FX.STOP_EVERY]
+
+    def shape(s, dists):
+        _, _, lon, lat = FX.shape_point(s * FX.PTS_PER_SHAPE + pts)
+        sx, sy = lon[stops] + 2e-5, lat[stops] - 1e-5
+        ids = [f"stop_{s}_{q}" for q in stops]
+        return (f"shp_{s}", lon.tolist(), lat.tolist(), ids, sx.tolist(), sy.tolist(), dists)
+
+    _, _, lon0, lat0 = FX.shape_point(pts)
+    cum = np.r_[0.0, np.cumsum(K.haversine_km(lon0[:-1], lat0[:-1], lon0[1:], lat0[1:]))]
+    shape_rows = [
+        shape(0, None),
+        shape(1, [None, 1.0, 2.0, 3.0, 4.0]),
+        # meters, last stop at the shape's end: a 'dist' row
+        shape(0, (cum[stops] * 1000.0 * cum[-1] / cum[stops[-1]]).tolist()),
+        shape(2, [0.0, 1.0, 2.0, 3.0, 400.0]),  # +-10% miss: 'fallback'
+        shape(3, None),
+        ("shp_empty", [], [], ["a", "b"], [-74.0, -74.1], [42.0, 42.1], None),
+        ("shp_one", [-74.0], [42.0], ["a", "b"], [-74.0, -74.1], [42.0, 42.1], None),
+        ("shp_1stop", shape(4, None)[1], shape(4, None)[2], ["a"], [-74.0], [42.0], None),
+    ]
+    shape_rows[2] = ("shp_dist", *shape_rows[2][1:])
+    shapes = spark.createDataFrame(
+        shape_rows,
+        "shape_id string, xs array<double>, ys array<double>, stop_ids array<string>,"
+        " stop_lons array<double>, stop_lats array<double>, stop_dists array<double>",
+    )
+
+    def want_net(rows):
+        out = {}
+        for sid, xs, ys, ids, sx, sy, d in rows:
+            dd = None if d is None else np.array([np.nan if v is None else v for v in d])
+            src, slices = snap._slice_shape(*map(np.asarray, (xs, ys, sx, sy)), dd)
+            for i, lo, ln, gx, gy in slices:
+                out[(sid, i)] = (ids[i], ids[i + 1], lo, ln, gx.tolist(), gy.tolist(), src)
+        return out
+
+    wn = want_net(shape_rows)
+    assert {v[-1] for v in wn.values()} == {"geom", "dist", "fallback"}
+    assert {k[0] for k in wn} == {"shp_0", "shp_1", "shp_dist", "shp_2", "shp_3"}
+    assert {v[-1] for k, v in wn.items() if k[0] in ("shp_0", "shp_1")} == {"geom"}
+
+    # --- chooser: tie-heavy candidates (shared intervals, overlap
+    # lengths, deviations and references, non-ASCII references)
+    refs = ["ref_a", "ref_b", "ref_é", "ref_z", "REF"]
+    cand_rows = []
+    for g in range(40):
+        for j in range(int(rng.integers(1, 9))):
+            a = float(rng.choice([0.0, 0.25, 0.5, 0.1 + 0.2, rng.uniform(0, 1)]))
+            b = a + float(rng.choice([0.0, 0.25, 0.5, 0.3, rng.uniform(0, 1)]))
+            cand_rows.append((
+                f"shp_{g % 7}", g, 100 * g + j, str(rng.choice(refs)), j % 3, a, b,
+                0.0, 1.0, float(rng.choice([0.25, 0.5, b - a])),
+                float(rng.choice([0.001, 0.002, rng.uniform(0, 0.01)])), 0.01, 1.0,
+            ))
+    refined = spark.createDataFrame(
+        cand_rows,
+        "shape_id string, shape_index int, segment_id long, shst_reference string,"
+        " networklevel int, section_start double, section_end double, osm_start double,"
+        " osm_end double, intxn_len_km double, mean_dev_km double, max_dev_km double,"
+        " g_len_km double",
+    )
+    cols = [f.name for f in SJ.REFINE_SCHEMA.fields]
+
+    def want_choose(rows, cap=None):
+        groups: dict = {}
+        for r in rows:
+            if r[9] / r[12] >= SJ.MIN_COVER_RATIO:
+                groups.setdefault((r[0], r[1]), []).append(dict(zip(cols, r)))
+        out = {}
+        for lst in groups.values():
+            if cap is not None:
+                lst = sorted(lst, key=lambda c: (-c["intxn_len_km"], c["mean_dev_km"],
+                                                 c["shst_reference"], c["segment_id"]))[:cap]
+            for i, rank in _reference_choose(lst):
+                out[lst[i]["segment_id"]] = (*(lst[i][c] for c in cols), rank)
+        return out
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got_tiles = tiles.assign_tiles(osm.select("segment_id", "networklevel"), osm).collect()
+        got_net = snap.snap_and_slice(shapes).collect()
+        got_choose = SJ.choose_matches(refined).collect()
+        got_cap = SJ.choose_matches(refined, max_candidates_per_segment=2).collect()
+    finally:
+        spark.conf.set(key, prev)
+
+    assert {tuple(r) for r in got_tiles} == want_tiles
+    assert len(got_tiles) == len(want_tiles)
+
+    got = {(r.shape_id, r.shape_index): (r.from_stop_id, r.to_stop_id, r.start_dist_km,
+                                         r.length_km, r.xs, r.ys, r.dist_source) for r in got_net}
+    assert len(got_net) == len(got) and got == wn
+
+    # the cover both rejects candidates and keeps several per segment
+    want = want_choose(cand_rows)
+    assert len(want) < len([r for r in cand_rows if r[9] / r[12] >= SJ.MIN_COVER_RATIO])
+    assert max(v[-1] for v in want.values()) >= 3
+    for rows, cap in ((got_choose, None), (got_cap, 2)):
+        want = want_choose(cand_rows, cap)
+        assert {r.segment_id: tuple(r) for r in rows} == want
+        assert len(rows) == len(want)
+
+    # kernel bodies on an empty and a sliced batch
+    osm_b = pa.RecordBatch.from_pylist([
+        {"segment_id": s, "min_zoom": int(K.zoom_for_networklevel(np.array([nl]))[0]),
+         "xs": xs, "ys": ys} for s, nl, xs, ys in osm_rows
+    ])
+    t_schema = to_arrow_schema(T.DataType.fromDDL(tiles.TILES_SCHEMA))
+    assert pa.Table.from_batches(tiles._tiles([osm_b.slice(0, 0)], t_schema)).num_rows == 0
+    part = pa.Table.from_batches(tiles._tiles([osm_b.slice(3, 6)], t_schema))
+    sliced = {s for s, *_ in osm_rows[3:9]}
+    assert set(zip(*part.to_pydict().values())) == {t for t in want_tiles if t[0] in sliced}
+
+    sh_b = pa.RecordBatch.from_pylist([
+        dict(zip(("shape_id", "xs", "ys", "stop_ids", "stop_lons", "stop_lats", "stop_dists"), r))
+        for r in shape_rows
+    ])
+    n_schema = to_arrow_schema(T.DataType.fromDDL(snap.SEGMENTS_SCHEMA))
+    assert pa.Table.from_batches(snap._fit_and_slice([sh_b.slice(0, 0)], n_schema)).num_rows == 0
+    part = pa.Table.from_batches(snap._fit_and_slice([sh_b.slice(1, 3)], n_schema)).to_pylist()
+    assert {(r["shape_id"], r["shape_index"]): tuple(list(r.values())[2:]) for r in part} == (
+        want_net(shape_rows[1:4])
+    )
+
+    groups: dict = {}
+    for r in cand_rows:
+        groups.setdefault((r[0], r[1]), []).append(dict(zip(cols[2:], r[2:12])))
+    ch_b = pa.RecordBatch.from_pylist(
+        [{"shape_id": k[0], "shape_index": k[1], "cands": v} for k, v in groups.items()]
+    )
+    c_schema = to_arrow_schema(SJ.CHOSEN_SCHEMA)
+    assert pa.Table.from_batches(SJ._choose([ch_b.slice(0, 0)], c_schema)).num_rows == 0
+    part = pa.Table.from_batches(SJ._choose([ch_b.slice(5, 9)], c_schema)).to_pylist()
+    want = {}
+    for (sid, si), lst in list(groups.items())[5:14]:
+        for i, rank in _reference_choose(lst):
+            want[lst[i]["segment_id"]] = (sid, si, *lst[i].values(), rank)
+    assert {r["segment_id"]: tuple(r.values()) for r in part} == want
+
+
+def test_chooser_rejects_nan_sort_key():
+    """A NaN sort key has no place in the greedy order (Python sorted()
+    and a lexsort would disagree on it): the chooser raises instead."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from gtfs_conflation_pipeline_spark.operators import spatial_join as SJ
+
+    cand = {"segment_id": 1, "shst_reference": "r", "networklevel": 0,
+            "section_start": 0.0, "section_end": 1.0, "osm_start": 0.0,
+            "osm_end": 1.0, "intxn_len_km": 1.0, "mean_dev_km": float("nan"),
+            "max_dev_km": 0.0}
+    batch = pa.RecordBatch.from_pylist([{"shape_id": "s", "shape_index": 0, "cands": [cand]}])
+    with pytest.raises(ValueError, match="non-finite"):
+        list(SJ._choose([batch], to_arrow_schema(SJ.CHOSEN_SCHEMA)))

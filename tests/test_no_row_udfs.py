@@ -1,6 +1,9 @@
 """North-rule lint: no per-row Python UDFs, no RDD API, anywhere in the
-engine (SURVEY.md §7 audit). Only pandas_udf / applyInPandas / mapInPandas /
-mapInArrow are allowed Python entry points."""
+engine (SURVEY.md §7 audit). Only pandas_udf / mapInPandas / mapInArrow
+(and applyInPandasWithState in streaming/) are allowed Python entry points;
+the conflation chain's kernels share one mapInArrow boundary
+(functions.udfs), so a grouped applyInPandas or the old pandas-frame
+helper `arrow_frame` is rejected outside streaming/."""
 
 import re
 from pathlib import Path
@@ -15,13 +18,22 @@ FORBIDDEN = [
     (re.compile(r"\bsparkContext\.parallelize\b"), "RDD parallelize"),
     (re.compile(r"\bforeachPartition\b"), "imperative foreachPartition"),
 ]
+# stateful streaming needs applyInPandasWithState; nothing else may group
+# into pandas
+FORBIDDEN_OUTSIDE_STREAMING = [
+    (re.compile(r"\.applyInPandas\("), "grouped applyInPandas"),
+    (re.compile(r"\barrow_frame\b"), "pandas-frame kernel output (use udfs.emit)"),
+]
 
 
 def test_no_row_udfs_or_rdd():
     offenders = []
     for py in PKG.rglob("*.py"):
         text = py.read_text()
-        for pat, label in FORBIDDEN:
+        rules = FORBIDDEN
+        if "streaming" not in py.relative_to(PKG).parts:
+            rules = FORBIDDEN + FORBIDDEN_OUTSIDE_STREAMING
+        for pat, label in rules:
             for m in pat.finditer(text):
                 line = text[: m.start()].count("\n") + 1
                 offenders.append(f"{py.relative_to(PKG.parent)}:{line} {label}")

@@ -68,3 +68,27 @@ def test_rows_only_queries_run(name, spark):
     df = QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.columns) > 0
+
+
+def test_sig_ckpt_reads_through_the_callers_session(spark):
+    """A `_sig_ckpt` query run off the thread that built the session, with
+    a second session alive, reads its signature table through the caller's
+    session: `SparkSession.getActiveSession()` is None on such a thread."""
+    import threading
+
+    other = spark.newSession()
+    out = {}
+
+    def run():
+        try:
+            df = QUERIES["phash_neardup"](spark, SF_DIR)
+            out["session"], out["rows"] = df.sparkSession, df.count()
+        except Exception as e:  # surfaced by the assertion below
+            out["error"] = e
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join()
+    assert "error" not in out, out.get("error")
+    assert out["session"] is spark and out["session"] is not other
+    assert out["rows"] > 0

@@ -280,6 +280,11 @@ def test_streaming_hamming_ttl_evicts_quiet_bucket(spark, tmp_path):
     def _input_rows() -> float:
         return sum(p["numInputRows"] for p in q.recentProgress)
 
+    def _batch_s() -> float:
+        # longest recent micro-batch wall, from the stream's own progress
+        walls = [p["durationMs"].get("triggerExecution", 0) for p in q.recentProgress[-5:]]
+        return max(walls, default=0) / 1000.0
+
     def _wait_until(pred, timeout_s=120):
         t0 = _t.time()
         while _t.time() - t0 < timeout_s:
@@ -438,6 +443,11 @@ def test_streaming_hamming_ttl_readmission_is_at_least_once(spark, tmp_path):
         got = spark.table("readmit_pairs").toPandas()
         return got[(got.id_a == 1) & (got.id_b == 2)]
 
+    def _batch_s() -> float:
+        # longest recent micro-batch wall, from the stream's own progress
+        walls = [p["durationMs"].get("triggerExecution", 0) for p in q.recentProgress[-5:]]
+        return max(walls, default=0) / 1000.0
+
     def _wait_until(pred, timeout_s=120):
         t0 = _t.time()
         while _t.time() - t0 < timeout_s:
@@ -455,14 +465,18 @@ def test_streaming_hamming_ttl_readmission_is_at_least_once(spark, tmp_path):
         assert _wait_until(lambda s=seen: _input_rows() >= s)
         t_doc1 = _t.time()
         # keep bucket (1,0) warm with a filler cadence (each iteration waits
-        # for its batch, so gaps stay ~2-3 s << ttl) UNTIL bucket (0,555)
-        # has been quiet for ttl + 3 s — time-based, so the eviction
-        # precondition holds on a fast idle box (which could race through a
-        # fixed iteration count inside the TTL) and on a loaded one (where
-        # a fixed count at a slow cadence needlessly multiplies exposure).
+        # for its batch) UNTIL bucket (0,555) has been quiet for ttl + 3 s —
+        # time-based, so the eviction precondition holds on a fast idle box
+        # (which could race through a fixed iteration count inside the TTL)
+        # and on a loaded one (where a fixed count at a slow cadence
+        # needlessly multiplies exposure). The pause between fillers is
+        # paced from the observed batch walls: a filler is processed up to
+        # ~2 batches after its write, so with slow batches (3.5-4.4 s seen
+        # on 4 vCPU under a full suite) the next filler is written at once
+        # and the filler-to-filler gap stays inside the TTL.
         k = 0
         while _t.time() - t_doc1 < ttl_sec + 3:
-            _t.sleep(0.8)
+            _t.sleep(max(0.0, min(0.8, ttl_sec / 4 - 2 * _batch_s())))
             write([(100 + k, 3855)])
             k += 1
             seen += 1
